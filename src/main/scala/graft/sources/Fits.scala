@@ -182,7 +182,7 @@ object Fits {
     var closed = false
     def close(): Unit = if (!closed) { closed = true; try in.close() catch { case _: Exception => } }
     // short-circuited consumption (limit/take) and task death must not leak
-    // the handle — same contract as Decode.closeOnExhaust
+    // the handle: close on exhaustion, and on task completion as a backstop
     val tc = org.apache.spark.TaskContext.get()
     if (tc != null) tc.addTaskCompletionListener[Unit](_ => close())
     val buf = new Array[Byte](t.rowBytes)

@@ -859,8 +859,8 @@ object GraftScan {
   }
 
   /** Exact table-wide SUM of an integer column from the per-chunk sums the
-    * manifests carry (v3) — None when not provable: non-integer column, any
-    * chunk without a sum (legacy v2 manifest, per-chunk overflow), a
+    * manifests carry — None when not provable: non-integer column, any
+    * chunk without a sum (per-chunk overflow), a
     * backfilled partition without materialized chunks, or accumulator
     * overflow. O(segments) metadata reads via the cached manifests, then
     * O(chunks) driver adds — no chunk file is opened.
@@ -1164,25 +1164,25 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
         .map { case (c, conds) =>
           c + "@" + graft.index.Index.metaIdent(store, c) + ":" +
             conds.mkString("&&") }.mkString("|")
-    GraftScan.cachedPlan(key) {
+    // a failed consult falls back OUTSIDE the cache: caching that None
+    // would keep routing off for this key after the index is readable again
+    try GraftScan.cachedPlan(key) {
       var acc: Option[Seq[(Long, Long)]] = None
-      try {
-        routed.foreach { case (c, conds) =>
-          val idx = graft.index.Index.table(spark, store, c)
-          val buckets = idx.where(conds.reduce(_ && _))
-            .select((fcol(graft.index.Index.RowIdCol) / g).cast("long").as("b"))
-            .distinct().limit(maxRanges + 1).collect().map(_.getLong(0))
-          if (buckets.length <= maxRanges) {
-            val ranges = GraftScan.bucketsToRanges(buckets.sorted, g)
-            acc = Some(acc.fold(ranges)(prev => GraftScan.intersectRanges(prev, ranges)))
-          }
+      routed.foreach { case (c, conds) =>
+        val idx = graft.index.Index.table(spark, store, c)
+        val buckets = idx.where(conds.reduce(_ && _))
+          .select((fcol(graft.index.Index.RowIdCol) / g).cast("long").as("b"))
+          .distinct().limit(maxRanges + 1).collect().map(_.getLong(0))
+        if (buckets.length <= maxRanges) {
+          val ranges = GraftScan.bucketsToRanges(buckets.sorted, g)
+          acc = Some(acc.fold(ranges)(prev => GraftScan.intersectRanges(prev, ranges)))
         }
-        acc
-      } catch {
-        case e: Exception =>
-          System.err.println(s"[graft] index routing failed, falling back to zone maps: ${e.getMessage}")
-          None
       }
+      acc
+    } catch {
+      case e: Exception =>
+        System.err.println(s"[graft] index routing failed, falling back to zone maps: ${e.getMessage}")
+        None
     }
   }
 
@@ -1243,8 +1243,7 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
         val m = graft.index.Index.readMeta(store, c)
         if (m.gens.nonEmpty) None // per-gen order only; fallback sorts
         else {
-          val d = graft.index.Index.dir(store, c)
-          val baseDir = if (m.base.isEmpty) d else s"$d/${m.base}"
+          val baseDir = s"${graft.index.Index.dir(store, c)}/${m.base}"
           val files = FsIO.list(baseDir)
             .filter(f => f.startsWith("part-") && f.endsWith(".parquet")).sorted
           if (files.isEmpty) None
@@ -1276,7 +1275,7 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
       case Some(sel) =>
         val wanted = required.fieldNames.filterNot(_ == "_row_id").toSeq
         val (units, _) = store.planUnits(wanted, sel, emptyMeansAll = false)
-        return units.map(u => GraftInputPartition(u, store.spec, wanted,
+        return units.map(u => GraftInputPartition(u, store.spec,
           required.fieldNames.toSeq): InputPartition).toArray
       case None => ()
     }
@@ -1307,7 +1306,7 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
     // emptyMeansAll=false: a fully-pruned projection (count(*), or bare
     // _row_id) decodes NO column chunks — units carry row counts only
     val (units, _) = store.planUnits(wanted, sel, emptyMeansAll = false)
-    units.map(u => GraftInputPartition(u, store.spec, wanted,
+    units.map(u => GraftInputPartition(u, store.spec,
       required.fieldNames.toSeq, probes): InputPartition).toArray
   }
 
@@ -1316,42 +1315,24 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
 }
 
 final case class GraftInputPartition(unit: DecodeUnit, spec: TableSpec,
-    wanted: Seq[String], outFields: Seq[String],
+    outFields: Seq[String],
     probes: Seq[(String, Array[Long])] = Nil) extends InputPartition
 
 class GraftReaderFactory(required: StructType) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+  // Ordered partitions stream row-wise (value-order scatter-back); every
+  // other partition reads columnar (supportColumnarReads below)
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
-      case op: GraftOrderedPartition => return new OrderedPartitionReader(op)
-      case _ => ()
+      case op: GraftOrderedPartition => new OrderedPartitionReader(op)
+      case other => throw new IllegalStateException(
+        s"row reader requested for columnar partition $other")
     }
-    val p = partition.asInstanceOf[GraftInputPartition]
-    new PartitionReader[InternalRow] {
-      // unboxed path: Decode emits catalyst values directly (UTF8String,
-      // UnsafeArrayData bulk copies), permuted to the required fields
-      private val it = Decode.refineUnit(p.unit, p.probes) match {
-        case None => Iterator.empty
-        case Some(u) => Decode.decodeUnitInternal(u, p.spec, p.wanted, p.outFields)
-      }
-      private var current: InternalRow = _
-      override def next(): Boolean = {
-        if (!it.hasNext) return false
-        current = it.next()
-        true
-      }
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
-    }
-  }
 
   // vectorized path: decoded chunk arrays bulk-copied into column vectors
-  // (no per-row object, no boxing); Spark's ColumnarToRow is codegen'd.
-  // Ordered partitions stream row-wise (value-order scatter-back).
+  // (no per-row object, no boxing); Spark's ColumnarToRow is codegen'd. An
+  // empty projection reads as zero-column batches.
   override def supportColumnarReads(partition: InputPartition): Boolean =
     !partition.isInstanceOf[GraftOrderedPartition]
-
-  // (row-path readers above handle the empty projection by emitting
-  // field-less rows; the columnar reader emits zero-column batches)
 
   override def createColumnarReader(
       partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
@@ -1387,7 +1368,7 @@ final case class GraftStreamOffset(nrows: Long)
   * chunk-pruned DecodeUnits as a batch scan — a batch decodes only the new
   * segments' chunks, never rescans history. Offsets restart exactly from
   * the checkpoint (segment commits are atomic and immutable), giving
-  * end-to-end exactly-once when paired with the StreamingIngest sink's
+  * end-to-end exactly-once when paired with the native sink's epoch
   * lineage dedup. Rate control: `maxRowsPerTrigger` caps a batch; the cut
   * can land mid-segment because DecodeUnits slice row ranges exactly.
   *
@@ -1441,7 +1422,7 @@ class GraftMicroBatchStream(root: String, required: StructType,
       else GraftScan.fromRanges(GraftScan.intersectRanges(Seq((s, e)),
         GraftScan.toRanges(GraftScan.planSelection(st, rowIdFilters))))
     val (units, _) = st.planUnits(wanted, sel, emptyMeansAll = false)
-    units.map(u => GraftInputPartition(u, st.spec, wanted,
+    units.map(u => GraftInputPartition(u, st.spec,
       required.fieldNames.toSeq): InputPartition).toArray
   }
 

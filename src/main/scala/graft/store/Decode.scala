@@ -1,7 +1,6 @@
 package graft.store
 
 import graft.codec._
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
 import org.apache.spark.sql.vectorized.ColumnarBatch
@@ -11,7 +10,9 @@ import scala.collection.mutable
 /** Executor-side chunk decode for one (segment, partition) unit.
   * Mirrors the reference read path (pycolumns chunks.py:633-669: histogram
   * rows per chunk, decompress each touched chunk once, slice rows out) —
-  * here each unit decodes its pruned chunk list sequentially and emits Rows.
+  * here each unit decodes its pruned chunk list sequentially into columnar
+  * batches (ColumnarUnitReader), the one decoder behind every read path
+  * except the ordered scan's scatter-back (decodeUnitSlotted).
   */
 object Decode {
 
@@ -30,6 +31,14 @@ object Decode {
   val chunksRead = new java.util.concurrent.atomic.AtomicLong()
   val chunksFilterSkipped = new java.util.concurrent.atomic.AtomicLong()
 
+  /** Reject a chunk blob whose CRC32C differs from its manifest entry. */
+  private[store] def checkCrc(cm: ChunkMeta, blob: Array[Byte]): Unit = {
+    val crc = FsIO.crc32c(blob)
+    if (crc != cm.crc) throw new java.io.IOException(
+      s"chunk CRC mismatch in ${cm.file} @${cm.offset}: " +
+        f"manifest ${cm.crc}%08x, read $crc%08x (corruption or torn write)")
+  }
+
   /** Per-unit file handle cache: a unit decodes many chunks from the same
     * column file — open it ONCE and issue positioned reads, instead of an
     * open/close round-trip per chunk (on an object store, per-chunk opens
@@ -45,12 +54,7 @@ object Decode {
         FsIO.fs(dir).open(new org.apache.hadoop.fs.Path(s"$dir/${cm.file}")))
       val buf = new Array[Byte](cm.nbytes.toInt)
       in.readFully(cm.offset, buf)
-      if (verifyCrc) {
-        val crc = FsIO.crc32c(buf)
-        require(crc == cm.crc,
-          s"chunk CRC mismatch in ${cm.file} @${cm.offset}: " +
-            f"manifest ${cm.crc}%08x, read $crc%08x (corruption or torn write)")
-      }
+      if (verifyCrc) checkCrc(cm, buf)
       buf
     }
 
@@ -73,8 +77,8 @@ object Decode {
     * Sound because pushed filters are top-level conjuncts and every probe
     * hash is canonical (see GraftScan.filterProbes): a chunk whose filter
     * excludes ALL probe values of some conjunct can satisfy none of the
-    * unit's rows in that chunk's row range. Chunks without filters (legacy
-    * manifests, bool/binary kinds) and unreadable/corrupt filters survive
+    * unit's rows in that chunk's row range. Chunks without filters (filters
+    * disabled, bool/binary kinds) and unreadable/corrupt filters survive
     * conservatively; Spark re-applies every filter as residual.
     */
   def refineUnit(u: DecodeUnit,
@@ -82,7 +86,7 @@ object Decode {
     if (probes.isEmpty) return Some(u)
     u.sel match {
       case SelIds(_, _) => return Some(u) // id-gather paths keep their contract
-      case SelRange(_, _, step) if step != 1L => return Some(u) // stepped: row path only
+      case SelRange(_, _, step) if step != 1L => return Some(u) // keep the step grid
       case _ => ()
     }
     val dir = Format.segDir(u.root, u.segment)
@@ -136,7 +140,9 @@ object Decode {
     Some(u.copy(colChunks = newCols, sel = newSel))
   }
 
-  /** Typed accessor facade over a decoded chunk. */
+  /** Catalyst-value accessor over a decoded chunk: strings as UTF8String,
+    * token lists as UnsafeArrayData (one bulk copy, no per-int boxing).
+    */
   private final class VecView(vec: ColVec) {
     private val listOffsets: Array[Int] = vec match {
       case IntListVec(lengths, _) =>
@@ -154,31 +160,15 @@ object Decode {
       case DoubleVec(a) => a(i)
       case FloatVec(a) => a(i)
       case BoolVec(a) => a(i)
-      case StrVec(a) => a(i)
-      case Utf8Vec(b) => new String(b(i), java.nio.charset.StandardCharsets.UTF_8)
+      case StrVec(a) => UTF8String.fromString(a(i))
+      case Utf8Vec(b) => UTF8String.fromBytes(b(i)) // zero transcode
       case BinVec(a) => a(i)
       case l: IntListVec =>
         val from = listOffsets(i)
         val until = listOffsets(i + 1)
         val out = new Array[Int](until - from)
         System.arraycopy(l.values, from, out, 0, out.length)
-        out.toSeq
-    }
-
-    /** Catalyst-value accessor for the unboxed InternalRow read path:
-      * strings as UTF8String, token lists as UnsafeArrayData (one bulk
-      * copy, no per-int boxing).
-      */
-    def getInternal(i: Int): Any = vec match {
-      case StrVec(a) => UTF8String.fromString(a(i))
-      case Utf8Vec(b) => UTF8String.fromBytes(b(i)) // zero transcode
-      case l: IntListVec =>
-        val from = listOffsets(i)
-        val until = listOffsets(i + 1)
-        val out = new Array[Int](until - from)
-        System.arraycopy(l.values, from, out, 0, out.length)
         UnsafeArrayData.fromPrimitiveArray(out)
-      case _ => get(i)
     }
   }
 
@@ -264,8 +254,12 @@ object Decode {
     import org.apache.spark.sql.execution.vectorized.{OnHeapColumnVector, WritableColumnVector}
     import org.apache.spark.sql.types.LongType
 
-    private val (locals, _) = selectedLocals(u)
+    private val (locals, positions) = selectedLocals(u)
     private val n = locals.length
+    // a row-id list may repeat ids: the contiguous-run bulk copies below
+    // then need the per-row path
+    private val repeats = positions != null &&
+      (1 until n).exists(i => locals(i) == locals(i - 1))
     private val reader = new BlobReader(u.root, u.segment)
     private var pos = 0
     private var lastBatch: ColumnarBatch = _
@@ -299,8 +293,10 @@ object Decode {
       }
     }
 
+    private def isId(f: String) = f == "_row_id" || f == "_pos"
+
     private val cursors: Array[ColCursor] = outFields.map { f =>
-      if (f == "_row_id") null else new ColCursor(spec.col(f), u.colChunks(f))
+      if (isId(f)) null else new ColCursor(spec.col(f), u.colChunks(f))
     }.toArray
 
     override def hasNext: Boolean = pos < n
@@ -310,13 +306,14 @@ object Decode {
       val until = math.min(n, pos + batchRows)
       val cnt = until - from
       val vectors = outFields.zipWithIndex.map { case (f, vi) =>
-        val dt = if (f == "_row_id") LongType
+        val dt = if (isId(f)) LongType
           else ColumnStore.sparkType(cursors(vi).cs.ptype)
         val vec = new OnHeapColumnVector(cnt, dt)
         if (f == "_row_id") {
           var i = 0
           while (i < cnt) { vec.putLong(i, u.globalOffset + locals(from + i)); i += 1 }
-        } else fill(cursors(vi), vec, from, until)
+        } else if (f == "_pos") vec.putLongs(0, cnt, positions, from)
+        else fill(cursors(vi), vec, from, until)
         vec: org.apache.spark.sql.vectorized.ColumnVector
       }.toArray
       pos = until
@@ -338,7 +335,7 @@ object Decode {
         val cnt = j - k
         val off = (locals(k) - lo).toInt
         // bulk path when the selected span is a contiguous run of rows
-        val contiguous = locals(j - 1) - locals(k) == (j - 1 - k).toLong
+        val contiguous = !repeats && locals(j - 1) - locals(k) == (j - 1 - k).toLong
         cv match {
           case LongVec(a) =>
             if (contiguous) vec.putLongs(k - from, cnt, a, off)
@@ -412,20 +409,17 @@ object Decode {
     }
   }
 
-  /** Per-column streaming cursor for the row read paths: serves values for
-    * ASCENDING local row ids holding at most ONE decoded chunk at a time —
-    * the same memory contract as ColumnarUnitReader and as the reference
-    * (chunks.py:633-669 decompresses one chunk at a time). The old shape
-    * materialized every selected value of every column as boxed Array[Any]
-    * for the whole unit: a SelAll read of a 10M-row partition held tens of
-    * millions of boxed objects per task.
+  /** Per-column streaming cursor for the ordered scan's scatter-back:
+    * serves catalyst values for ASCENDING local row ids holding at most ONE
+    * decoded chunk at a time — the same memory contract as
+    * ColumnarUnitReader and as the reference (chunks.py:633-669
+    * decompresses one chunk at a time).
     */
   private final class StreamCursor(u: DecodeUnit, cs: ColumnSpec,
-      chunks: Seq[ChunkMeta], reader: BlobReader, internal: Boolean) {
+      chunks: Seq[ChunkMeta], reader: BlobReader) {
     private val sorted = chunks.sortBy(_.rowStartLocal).toIndexedSeq
     private val fillV: Any =
       if (sorted.nonEmpty) null
-      else if (!internal) fillValue(cs)
       else fillValue(cs) match { // catalyst representation for InternalRows
         case s: String => UTF8String.fromString(s)
         case seq: Seq[_] => UnsafeArrayData.fromPrimitiveArray(
@@ -452,59 +446,8 @@ object Decode {
     def get(local: Long): Any = {
       if (sorted.isEmpty) return fillV // backfilled column: constant fill
       if (local >= hi || local < lo) advance(local)
-      if (internal) view.getInternal((local - lo).toInt)
-      else view.get((local - lo).toInt)
+      view.get((local - lo).toInt)
     }
-  }
-
-  /** Close the unit's file handles when the iterator drains; a task that
-    * dies mid-iteration is covered by the task-completion listener.
-    */
-  private def closeOnExhaust[T](reader: BlobReader, it: Iterator[T]): Iterator[T] = {
-    val tc = org.apache.spark.TaskContext.get()
-    if (tc != null) tc.addTaskCompletionListener[Unit](_ => reader.close())
-    new Iterator[T] {
-      override def hasNext: Boolean = {
-        val h = it.hasNext
-        if (!h) reader.close() // idempotent
-        h
-      }
-      override def next(): T = it.next()
-    }
-  }
-
-  /** DSv2 read path: emit InternalRows directly (catalyst values; token
-    * arrays via UnsafeArrayData bulk copies). outFields selects/permutes
-    * from (_row_id, wanted...). Streams chunk-at-a-time per column.
-    */
-  def decodeUnitInternal(u: DecodeUnit, spec: TableSpec, wanted: Seq[String],
-      outFields: Seq[String]): Iterator[InternalRow] = {
-    val (locals, _) = selectedLocals(u)
-    if (locals.isEmpty) return Iterator.empty
-    val n = locals.length
-    val reader = new BlobReader(u.root, u.segment)
-    val cursors = wanted.map(cn =>
-      new StreamCursor(u, spec.col(cn), u.colChunks(cn), reader, internal = true)).toArray
-    // map outFields onto (_row_id, wanted...) positions
-    val srcIdx = outFields.map {
-      case "_row_id" => -1
-      case cn =>
-        val i = wanted.indexOf(cn)
-        // -1 doubles as the _row_id sentinel below — a planning bug must
-        // fail here, not silently emit row ids as the column's values
-        require(i >= 0, s"outField $cn not among wanted columns $wanted")
-        i
-    }.toArray
-    closeOnExhaust(reader, (0 until n).iterator.map { i =>
-      val arr = new Array[Any](srcIdx.length)
-      var f = 0
-      while (f < srcIdx.length) {
-        arr(f) = if (srcIdx(f) < 0) u.globalOffset + locals(i)
-          else cursors(srcIdx(f)).get(locals(i))
-        f += 1
-      }
-      new GenericInternalRow(arr)
-    })
   }
 
   /** Decode a SelIds unit, writing each output row into `slots` at its
@@ -521,7 +464,7 @@ object Decode {
     val reader = new BlobReader(u.root, u.segment)
     try {
       val cursors = wanted.map(cn =>
-        new StreamCursor(u, spec.col(cn), u.colChunks(cn), reader, internal = true)).toArray
+        new StreamCursor(u, spec.col(cn), u.colChunks(cn), reader)).toArray
       val srcIdx = outFields.map {
         case "_row_id" => -1
         case cn =>
@@ -542,23 +485,5 @@ object Decode {
         i += 1
       }
     } finally reader.close()
-  }
-
-  def decodeUnit(u: DecodeUnit, spec: TableSpec,
-      wanted: Seq[String]): Iterator[Row] = {
-    val (locals, positions) = selectedLocals(u)
-    if (locals.isEmpty) return Iterator.empty
-    val n = locals.length
-    val reader = new BlobReader(u.root, u.segment)
-    val cursors = wanted.map(cn =>
-      new StreamCursor(u, spec.col(cn), u.colChunks(cn), reader, internal = false)).toArray
-    val hasPos = positions != null
-    closeOnExhaust(reader, (0 until n).iterator.map { i =>
-      val base = mutable.ArrayBuffer[Any](u.globalOffset + locals(i))
-      if (hasPos) base += positions(i)
-      var c = 0
-      while (c < cursors.length) { base += cursors(c).get(locals(i)); c += 1 }
-      Row.fromSeq(base.toSeq)
-    })
   }
 }

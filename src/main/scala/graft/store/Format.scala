@@ -39,8 +39,15 @@ object Format {
     * SEGMENT instead of a list+read per partition.
     */
   final val SegManifestFile = "_manifest.bin"
-  /** v2 adds per-column compression/chunking config; v1 stores readable. */
+  /** Schema format: columns with per-column compression/chunking config. */
   final val FormatVersion = 2
+
+  /** Loud failure for metadata in a layout this build does not write: an
+    * older pre-release format must never be silently misread.
+    */
+  private[store] def unsupported(kind: String, found: String, reads: String): Nothing =
+    throw new IllegalStateException(
+      s"unsupported $kind: found $found; this build reads $reads only")
 
   def segDir(root: String, seg: Long): String = s"$root/$SegmentsDir/seg$seg"
   def colFile(part: Int, col: String): String = s"p$part.$col.bin"
@@ -83,8 +90,7 @@ final case class ColumnSpec(
 final case class TableSpec(
     columns: Seq[ColumnSpec],
     targetChunkBytes: Long = 1L << 20, // reference default '1m', defaults.py:23
-    chunkRows: Int = 0,                // 0 = derive from targetChunkBytes
-    formatVersion: Int = Format.FormatVersion) {
+    chunkRows: Int = 0) {              // 0 = derive from targetChunkBytes
   def col(name: String): ColumnSpec =
     columns.find(_.name == name).getOrElse(
       throw new IllegalArgumentException(s"no such column: $name"))
@@ -142,14 +148,7 @@ final case class PartManifest(
 final case class SegmentCommit(
     segment: Long,
     partRows: Seq[Long], // rows per partition, ordered by partition id
-    lineage: String,
-    /** v2: visibility requires a `.commit-<n>` marker in the segments dir
-      * (the marker's create-exclusive write is BOTH the commit-order
-      * sequence allocation and the atomic publication — see
-      * ColumnStore.commitSegment). Legacy (v1) commits are visible by the
-      * record alone and order by segment number.
-      */
-    markered: Boolean = false) {
+    lineage: String) {
   def totalRows: Long = partRows.sum
 }
 
@@ -176,7 +175,6 @@ object BinCodec {
       w.writeByte(if (c.fill.isDefined) 1 else 0)
       c.fill.foreach(wStr(w, _))
       w.writeVar(c.addedAtSegment)
-      // v2: per-column compression + chunking config
       w.writeByte(if (c.compression.isDefined) 1 else 0)
       c.compression.foreach(wStr(w, _))
       w.writeVar(c.chunkBytes)
@@ -188,6 +186,9 @@ object BinCodec {
   def readTableSpec(b: Array[Byte]): TableSpec = {
     val r = new Reader(b)
     val ver = r.readVar().toInt
+    if (ver != Format.FormatVersion)
+      Format.unsupported("table schema (_schema.bin)", s"format v$ver",
+        s"format v${Format.FormatVersion}")
     val tcb = r.readVar()
     val cr = r.readVar().toInt
     val n = r.readVar().toInt
@@ -197,25 +198,33 @@ object BinCodec {
       val fw = r.readVar().toInt
       val fill = if (r.readByte() == 1) Some(rStr(r)) else None
       val seg = r.readVar()
-      val (comp, cb, ccr) =
-        if (ver >= 2) {
-          val comp = if (r.readByte() == 1) Some(rStr(r)) else None
-          (comp, r.readVar(), r.readVar().toInt)
-        } else (None, 0L, 0)
-      ColumnSpec(name, pt, fw, fill, seg, comp, cb, ccr)
+      val comp = if (r.readByte() == 1) Some(rStr(r)) else None
+      ColumnSpec(name, pt, fw, fill, seg, comp, r.readVar(), r.readVar().toInt)
     }
-    TableSpec(cols, tcb, cr, ver)
+    TableSpec(cols, tcb, cr)
   }
 
-  /** Leading sentinel distinguishing versioned part manifests from the
-    * legacy (v2) layout, whose first varint is the segment number — real
-    * segments are small, so this value can never collide.
+  /** Leading sentinel of part manifests and commit records, followed by
+    * the format version. Earlier layouts began with the segment number —
+    * real segments are small, so this value can never collide.
     */
   private final val ManifestMagic = 0x67726674aaL // "grft" + noise
+  private final val ManifestVersion = 4
+  private final val CommitVersion = 2
+
+  /** Check the magic and version, or fail naming what was found; layouts
+    * before the magic were version `preMagic`.
+    */
+  private def readVersion(r: Reader, kind: String, expect: Int, preMagic: Int): Unit = {
+    if (r.readVar() != ManifestMagic)
+      Format.unsupported(kind, s"v$preMagic (no magic)", s"v$expect")
+    val ver = r.readVar().toInt
+    if (ver != expect) Format.unsupported(kind, s"v$ver", s"v$expect")
+  }
 
   def writePartManifest(m: PartManifest): Array[Byte] = {
     val w = new Writer()
-    w.writeVar(ManifestMagic); w.writeVar(4L) // manifest format v4
+    w.writeVar(ManifestMagic); w.writeVar(ManifestVersion.toLong)
     w.writeVar(m.segment); w.writeVar(m.part.toLong); w.writeVar(m.nrows)
     // fixed width: a varint here would make manifest SIZE depend on timing
     w.writeLE64(m.elapsedNanos); wStr(w, m.lineage)
@@ -228,9 +237,7 @@ object BinCodec {
       wStr(w, c.file); w.writeVar(c.offset); w.writeVar(c.nbytes)
       w.writeVar(c.rawBytes); w.writeLE64(c.crc)
       w.writeVar(c.statsKind.toLong); w.writeLE64(c.minBits); w.writeLE64(c.maxBits)
-      // v3: exact integer chunk sums
       w.writeVar(c.sumKind.toLong); w.writeLE64(c.sumBits)
-      // v4: per-chunk membership filter location
       w.writeVar(c.filterKind.toLong); w.writeVar(c.filterOffset)
       w.writeVar(c.filterBytes)
     }
@@ -239,22 +246,16 @@ object BinCodec {
 
   def readPartManifest(b: Array[Byte]): PartManifest = {
     val r = new Reader(b)
-    val first = r.readVar()
-    val ver = if (first == ManifestMagic) r.readVar().toInt else { r.pos = 0; 2 }
+    readVersion(r, "part manifest", ManifestVersion, preMagic = 2)
     val seg = r.readVar(); val part = r.readVar().toInt; val nrows = r.readVar()
     val el = r.readLE64(); val lin = rStr(r)
     val uv = r.readVar().toInt
     val n = r.readVar().toInt
     val chunks = (0 until n).map { _ =>
-      val base = ChunkMeta(rStr(r), r.readVar().toInt, r.readVar(), r.readVar().toInt,
+      ChunkMeta(rStr(r), r.readVar().toInt, r.readVar(), r.readVar().toInt,
         r.readVar().toInt, r.readVar().toInt, rStr(r), r.readVar(), r.readVar(),
-        r.readVar(), r.readLE64(), r.readVar().toInt, r.readLE64(), r.readLE64())
-      val v3 =
-        if (ver >= 3) base.copy(sumKind = r.readVar().toInt, sumBits = r.readLE64())
-        else base
-      if (ver >= 4) v3.copy(filterKind = r.readVar().toInt,
-        filterOffset = r.readVar(), filterBytes = r.readVar())
-      else v3
+        r.readVar(), r.readLE64(), r.readVar().toInt, r.readLE64(), r.readLE64(),
+        r.readVar().toInt, r.readLE64(), r.readVar().toInt, r.readVar(), r.readVar())
     }
     PartManifest(seg, part, nrows, el, lin, uv, chunks)
   }
@@ -277,25 +278,28 @@ object BinCodec {
 
   def writeSegmentCommit(c: SegmentCommit): Array[Byte] = {
     val w = new Writer()
-    w.writeVar(ManifestMagic); w.writeVar(2L) // commit format v2
+    w.writeVar(ManifestMagic); w.writeVar(CommitVersion.toLong)
     w.writeVar(c.segment)
     w.writeVar(c.partRows.size.toLong)
     c.partRows.foreach(w.writeVar)
     wStr(w, c.lineage)
-    w.writeByte(if (c.markered) 1 else 0)
+    // visibility flag: the segment is published by its `.commit-<n>-<seg>`
+    // marker (ColumnStore.commitSegment); always set
+    w.writeByte(1)
     w.result()
   }
 
   def readSegmentCommit(b: Array[Byte]): SegmentCommit = {
     val r = new Reader(b)
-    val first = r.readVar()
-    val ver = if (first == ManifestMagic) r.readVar().toInt else { r.pos = 0; 1 }
+    readVersion(r, "segment commit record", CommitVersion, preMagic = 1)
     val seg = r.readVar()
     val n = r.readVar().toInt
     val rows = (0 until n).map(_ => r.readVar())
     val lin = rStr(r)
-    val markered = ver >= 2 && r.readByte() == 1
-    SegmentCommit(seg, rows, lin, markered)
+    if (r.readByte() != 1)
+      Format.unsupported("segment commit record", "v2 without the marker flag",
+        "marker-published v2")
+    SegmentCommit(seg, rows, lin)
   }
 
 }
@@ -341,6 +345,12 @@ object FsIO {
   private def crcSibling(p: java.nio.file.Path): java.nio.file.Path =
     p.resolveSibling("." + p.getFileName.toString + ".crc")
 
+  /** Hadoop create() makes parent dirs implicitly; the nio writers match that. */
+  private def createParents(p: java.nio.file.Path): Unit = {
+    val parent = p.getParent
+    if (parent != null) java.nio.file.Files.createDirectories(parent)
+  }
+
   private def isCrcSidecar(name: String): Boolean =
     name.startsWith(".") && name.endsWith(".crc")
 
@@ -378,6 +388,7 @@ object FsIO {
   def writeAtomic(path: String, bytes: Array[Byte]): Unit = {
     val lp = localOf(path)
     if (lp != null) {
+      createParents(lp)
       val tmp = lp.resolveSibling(
         lp.getFileName.toString + ".tmp-" + java.util.UUID.randomUUID().toString.take(8))
       java.nio.file.Files.write(tmp, bytes)
@@ -561,9 +572,7 @@ object FsIO {
     val lp = localOf(path)
     if (lp == null) return fs(path).create(new Path(path), true)
     val bytesPerSum = conf.getInt("file.bytes-per-checksum", 512)
-    // Hadoop create() makes parent dirs implicitly; match that
-    val parent = lp.getParent
-    if (parent != null) java.nio.file.Files.createDirectories(parent)
+    createParents(lp)
     val dataOut = java.nio.file.Files.newOutputStream(lp)
     new java.io.BufferedOutputStream(dataOut, 1 << 16) {
       private val crc = new java.util.zip.CRC32()

@@ -288,7 +288,7 @@ object Mutate {
     }
     val colCfg = CodecConfig.forColumn(cfg, spec.col(t.colName).compression)
     val replaced = byChunk.map { case (cm, (idxB, vals)) =>
-      val blob = FsIO.readRange(s"$dir/${cm.file}", cm.offset, cm.nbytes.toInt)
+      val blob = readVerified(dir, cm)
       val pt = spec.col(t.colName).ptype
       val any = vecToAny(Chunk.decode(blob))
       val idx = idxB.result()
@@ -404,6 +404,16 @@ object Mutate {
       FsIO.readAll(s"$dir/${Format.partManifestFile(part, vers.max)}"))
   }
 
+  /** A chunk blob checked against its manifest CRC32C before a COW update
+    * or vacuum rewrites it: the rewrite gets a fresh CRC (and sidecar), so
+    * a flipped bit copied unchecked would be certified as good data.
+    */
+  private def readVerified(dir: String, cm: ChunkMeta): Array[Byte] = {
+    val blob = FsIO.readRange(s"$dir/${cm.file}", cm.offset, cm.nbytes.toInt)
+    Decode.checkCrc(cm, blob)
+    blob
+  }
+
   // ---------------------------------------------------------------- vacuum
 
   final case class CompactTask(root: String, seg: Long, part: Int) extends Serializable
@@ -452,7 +462,7 @@ object Mutate {
       var offset = 0L
       try {
         m.chunks.filter(_.column == cs.name).sortBy(_.rowStartLocal).foreach { cm =>
-          val blob = FsIO.readRange(s"$dir/${cm.file}", cm.offset, cm.nbytes.toInt)
+          val blob = readVerified(dir, cm)
           out.write(blob)
           // carry the membership filter into the generation file — losing
           // it on vacuum would silently disable point-lookup pruning

@@ -296,11 +296,12 @@ class DataSourceSpec extends AnyFunSuite {
     val factory = scan.createReaderFactory()
     val skippedBefore = graft.store.Decode.chunksFilterSkipped.get()
     val got = parts.flatMap { p =>
-      val r = factory.createReader(p)
+      val r = factory.createColumnarReader(p)
       val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
       while (r.next()) {
-        val row = r.get()
-        buf += ((row.getUTF8String(0).toString, row.getLong(1)))
+        r.get().rowIterator().forEachRemaining { row =>
+          buf += ((row.getUTF8String(0).toString, row.getLong(1)))
+        }
       }
       r.close()
       buf
@@ -546,6 +547,34 @@ class DataSourceSpec extends AnyFunSuite {
     c.dropStore()
   }
 
+  test("a failed index consult is not cached: routing engages once the index is back") {
+    // unclustered keys: zone maps cannot prune, so only routing narrows the plan
+    val n = 4000
+    val keys = new scala.util.Random(17).shuffle((0 until n).map(_.toLong))
+    val schema = StructType(Seq(StructField("k", LongType, nullable = false)))
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(keys.map(Row(_)), 4), schema)
+    val c = Columns.fromDataFrame(spark, tmpDir("graft-idxfail"), df, chunkRows = 50)
+    c("k").createIndex()
+    def plannedChunks(): Int = {
+      val builder = new graft.sources.GraftScanBuilder(c.root)
+      builder.pushFilters(Array(org.apache.spark.sql.sources.EqualTo("k", 1234L)))
+      builder.build().asInstanceOf[graft.sources.GraftScan].planInputPartitions()
+        .map(_.asInstanceOf[graft.sources.GraftInputPartition]
+          .unit.colChunks.valuesIterator.map(_.size).sum).sum
+    }
+    val base = graft.index.Index.basePath(c.store, "k")
+    graft.store.FsIO.rename(base, base + ".moved")
+    val fallback = plannedChunks() // consult fails: zone maps only
+    assert(fallback >= n / 50, s"expected the unpruned plan, got $fallback chunks")
+    graft.store.FsIO.rename(base + ".moved", base)
+    // same cache key (root, nrows, stamp, meta identity, predicate)
+    val routed = plannedChunks()
+    assert(routed <= 2, s"routing did not engage after the index came back: $routed chunks")
+    assert(spark.read.format("graft").load(c.root).where(col("k") === 1234L).count() == 1)
+    c.dropStore()
+  }
+
   test("runtime IN filter prunes chunks at execution (DPP analogue)") {
     val schema = StructType(Seq(StructField("id", LongType, nullable = false)))
     val df0 = spark.createDataFrame(
@@ -569,11 +598,14 @@ class DataSourceSpec extends AnyFunSuite {
     assert(chunkCount(after) <= 4,
       s"runtime IN should prune to ~2 chunks, planned ${chunkCount(after)}")
     // the surviving chunks still cover every requested row
+    val factory = scan.createReaderFactory()
     val rows = after.flatMap { p =>
-      val gp = p.asInstanceOf[graft.sources.GraftInputPartition]
-      val it = graft.store.Decode.decodeUnitInternal(gp.unit, gp.spec, gp.wanted,
-        gp.outFields)
-      it.map(_.getLong(gp.outFields.indexOf("id"))).toSeq
+      val idPos = p.asInstanceOf[graft.sources.GraftInputPartition].outFields.indexOf("id")
+      val r = factory.createColumnarReader(p)
+      val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
+      while (r.next()) r.get().rowIterator().forEachRemaining(row => buf += row.getLong(idPos))
+      r.close()
+      buf
     }.toSet
     assert(Set(100L, 105L, 2000L).subsetOf(rows))
     // end-to-end: a broadcast join over the store stays exact with the

@@ -70,28 +70,14 @@ class FormatSpec extends AnyFunSuite {
     assert(BinCodec.readPartManifest(BinCodec.writePartManifest(m)) == m)
   }
 
-  test("v3 manifest bytes (no filter fields) read with filterKind 0") {
-    // hand-write the v3 layout: magic, ver 3, header, one chunk WITHOUT the
-    // v4 filter triple — a round-4 store must keep reading
-    import graft.codec.Bytes
-    val w = new Bytes.Writer()
-    def wStr(s: String): Unit = {
-      val b = s.getBytes("UTF-8"); w.writeVar(b.length.toLong); w.writeBytes(b)
-    }
-    w.writeVar(0x67726674aaL); w.writeVar(3L)
-    w.writeVar(2L); w.writeVar(7L); w.writeVar(1000L)
-    w.writeLE64(5L); wStr("lineage"); w.writeVar(0L)
-    w.writeVar(1L) // one chunk
-    wStr("a"); w.writeVar(0L); w.writeVar(0L); w.writeVar(500L)
-    w.writeVar(4L); w.writeVar(1L); wStr("p7.a.bin"); w.writeVar(0L)
-    w.writeVar(999L); w.writeVar(4000L); w.writeLE64(0xdeadL)
-    w.writeVar(1L); w.writeLE64(-5L); w.writeLE64(42L)
-    w.writeVar(1L); w.writeLE64(12345L) // v3 sum
-    val m = BinCodec.readPartManifest(w.result())
-    val cm = m.chunks.head
-    assert(cm.sumKind == 1 && cm.sumBits == 12345L)
-    assert(cm.filterKind == 0 && cm.filterOffset == 0L && cm.filterBytes == 0L,
-      "v3 chunks must read as filter-less")
+  test("writeAtomic creates missing parent directories on local paths") {
+    val base = s"/tmp/graft-wa-${java.util.UUID.randomUUID().toString.take(8)}"
+    val path = s"$base/sub/dir/f.bin"
+    assert(!FsIO.exists(base))
+    FsIO.writeAtomic(path, Array[Byte](1, 2, 3))
+    assert(FsIO.readAll(path).toSeq == Seq[Byte](1, 2, 3))
+    assert(FsIO.list(s"$base/sub/dir") == Seq("f.bin"), "tmp file left behind")
+    FsIO.delete(base, recursive = true)
   }
 
   test("SegmentCommit and Meta round trip") {

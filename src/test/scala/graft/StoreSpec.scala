@@ -97,7 +97,9 @@ class StoreSpec extends AnyFunSuite {
 
   test("gather arbitrary rows in request order incl. duplicates (P3/P4)") {
     val (st, data) = mkStore(300)
-    val ids = Array(250L, 3L, 3L, 299L, 0L, 42L)
+    // ids 0, 1, 2, 3, 3, 5 share a chunk and span as many rows as there are
+    // ids: a repeated id must not pass for a contiguous run
+    val ids = Array(250L, 3L, 3L, 299L, 0L, 42L, 2L, 5L, 1L)
     val sel = SelIds(ids, Array.tabulate(ids.length)(_.toLong))
     val out = st.read(spark, Seq("id", "scol"), sel).collect().sortBy(_.getLong(1))
     assert(out.length == ids.length)
@@ -265,6 +267,36 @@ class StoreSpec extends AnyFunSuite {
     st.dropStore()
   }
 
+  test("vacuum and COW updates refuse a chunk that fails its manifest CRC") {
+    val (st, _) = mkStore(500, chunkRows = 50, parts = 1)
+    Mutate.update(spark, st, "rand", Array(3L), Array(1.5f))
+    val live = st.partManifest(0L, 0)
+    // flip one byte inside an `id` chunk, which vacuum copies unchanged
+    val cm = live.chunks.filter(_.column == "id").maxBy(_.rowStartLocal)
+    val raf = new java.io.RandomAccessFile(
+      s"${Format.segDir(st.root, 0L)}/${cm.file}", "rw")
+    try {
+      val pos = cm.offset + cm.nbytes / 2
+      raf.seek(pos)
+      val b = raf.read()
+      raf.seek(pos)
+      raf.write(b ^ 0x40)
+    } finally raf.close()
+    def crcFailure(e: Throwable): Boolean =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("CRC mismatch"))
+    val e = intercept[Exception](Mutate.vacuum(spark, st))
+    assert(crcFailure(e), s"vacuum did not report the corrupt chunk: $e")
+    val reopened = ColumnStore.open(st.root)
+    assert(reopened.partManifest(0L, 0) == live, "a failed vacuum published a manifest")
+    // a COW update of the corrupt chunk is refused the same way
+    val e2 = intercept[Exception](Mutate.update(spark, reopened, "id",
+      Array(cm.rowStartLocal), Array[Any](7L)))
+    assert(crcFailure(e2), s"update did not report the corrupt chunk: $e2")
+    assert(ColumnStore.open(st.root).partManifest(0L, 0) == live)
+    st.dropStore()
+  }
+
   test("resume: incomplete segment re-encodes only missing partitions (north rule)") {
     // resume requires an IDENTITY: the retried append carries the same
     // lineage, so the segment claim recognizes the orphan as its own
@@ -365,8 +397,7 @@ class StoreSpec extends AnyFunSuite {
     val segsDir = s"${st.root}/${Format.SegmentsDir}"
     val markers = FsIO.list(segsDir).filter(_.startsWith(".commit-"))
     // v3 markers carry the segment in the NAME (atomic single-name publish)
-    val seg1Marker = markers.find(m =>
-      ColumnStore.markerParts(m)._2.contains(1L)).get
+    val seg1Marker = markers.find(m => ColumnStore.markerParts(m)._2 == 1L).get
     FsIO.delete(s"$segsDir/$seg1Marker")
     st.invalidateAll()
     assert(st.nrows == 100, "unmarkered commit must be invisible")
@@ -381,24 +412,48 @@ class StoreSpec extends AnyFunSuite {
     st.dropStore()
   }
 
-  test("legacy payload-only .commit-<n> markers still order segments (v2 compat)") {
-    val (st, _) = mkStore(100)
-    st.append(spark, refDf(refData(50, seed = 31L), 2), AsIs, lineage = "t:legacy")
-    st.invalidateAll()
-    assert(st.segments == Seq(0L, 1L) && st.nrows == 150)
-    // rewrite seg 1's v3 name-encoded marker as a legacy payload marker
-    val segsDir = s"${st.root}/${Format.SegmentsDir}"
-    val v3 = FsIO.list(segsDir).filter(_.startsWith(".commit-"))
-      .find(m => ColumnStore.markerParts(m)._2.contains(1L)).get
-    val n = ColumnStore.markerParts(v3)._1
-    val w = new graft.codec.Bytes.Writer(); w.writeVar(1L)
-    FsIO.delete(s"$segsDir/$v3")
-    FsIO.writeAtomic(s"$segsDir/.commit-$n", w.result())
-    st.invalidateAll()
-    assert(st.segments == Seq(0L, 1L) && st.nrows == 150,
-      "legacy marker must publish identically")
-    st.verify()
-    st.dropStore()
+  {
+    def bytes(f: Bytes.Writer => Unit): Array[Byte] = {
+      val w = new Bytes.Writer(); f(w); w.result()
+    }
+    def wStr(w: Bytes.Writer, s: String): Unit = {
+      val b = s.getBytes("UTF-8"); w.writeVar(b.length.toLong); w.writeBytes(b)
+    }
+    val magic = 0x67726674aaL
+    // (case, file kind, version the error must name, read of that older layout)
+    val cases: Seq[(String, String, String, () => Any)] = Seq(
+      ("v1 schema", "table schema", "format v1", () => BinCodec.readTableSpec(bytes { w =>
+        w.writeVar(1L); w.writeVar(1L << 20); w.writeVar(0L); w.writeVar(1L)
+        wStr(w, "x"); w.writeVar(PType.I64.id.toLong); w.writeVar(0L)
+        w.writeByte(0); w.writeVar(0L)
+      })),
+      ("v3 manifest", "part manifest", "v3", () => BinCodec.readPartManifest(bytes { w =>
+        w.writeVar(magic); w.writeVar(3L)
+        w.writeVar(2L); w.writeVar(7L); w.writeVar(1000L)
+        w.writeLE64(5L); wStr(w, "lineage"); w.writeVar(0L); w.writeVar(0L)
+      })),
+      ("v1 commit record", "segment commit record", "v1", () => BinCodec.readSegmentCommit(bytes { w =>
+        w.writeVar(1L); w.writeVar(1L); w.writeVar(50L); wStr(w, "t")
+      })),
+      ("payload-only commit marker", "commit marker", "v2", () => {
+        // seg 0 published by a payload-only `.commit-<n>` marker
+        val (st, _) = mkStore(100)
+        try {
+          val segsDir = s"${st.root}/${Format.SegmentsDir}"
+          val m = FsIO.list(segsDir).filter(_.startsWith(".commit-")).head
+          FsIO.delete(s"$segsDir/$m")
+          FsIO.writeAtomic(s"$segsDir/.commit-${ColumnStore.markerParts(m)._1}",
+            bytes(_.writeVar(0L)))
+          ColumnStore.open(st.root).segments
+        } finally st.dropStore()
+      }))
+    cases.foreach { case (name, kind, version, read) =>
+      test(s"pre-release on-disk format fails loudly: $name") {
+        val e = intercept[IllegalStateException](read())
+        assert(e.getMessage.contains(s"unsupported $kind") &&
+          e.getMessage.contains(s"found $version"), e.getMessage)
+      }
+    }
   }
 
   test("failed anonymous append's orphan is not absorbed by a later append") {
@@ -498,21 +553,6 @@ class StoreSpec extends AnyFunSuite {
       CodecConfig.forColumn(CodecConfig.default, Some("lz77"))
     }
     st.dropStore()
-  }
-
-  test("format v1 schema still readable (forward-written v2 fields optional)") {
-    // simulate a v1 writer: serialize WITHOUT the v2 per-column fields
-    val w = new graft.codec.Bytes.Writer()
-    def wStr(s: String): Unit = {
-      val b = s.getBytes("UTF-8"); w.writeVar(b.length.toLong); w.writeBytes(b)
-    }
-    w.writeVar(1L) // formatVersion 1
-    w.writeVar(1L << 20); w.writeVar(0L); w.writeVar(1L)
-    wStr("x"); w.writeVar(PType.I64.id.toLong); w.writeVar(0L)
-    w.writeByte(0); w.writeVar(0L)
-    val t = BinCodec.readTableSpec(w.result())
-    assert(t.columns == Seq(ColumnSpec("x", PType.I64.id)))
-    assert(t.formatVersion == 1)
   }
 
   test("meta entries: arbitrary nested JSON, write/read/update (S10)") {

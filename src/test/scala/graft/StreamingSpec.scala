@@ -3,7 +3,6 @@ package graft
 import graft.api.Columns
 import graft.store.{ColumnSpec, TableSpec}
 import graft.codec.PType
-import graft.streaming.StreamingIngest
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -53,48 +52,33 @@ class StreamingSpec extends AnyFunSuite {
     assert(kept == Seq(1L, 2L, 4L, 6L), s"dups not dropped: $kept")
   }
 
-  test("streaming ingest: micro-batches append segments exactly once") {
+  test("native sink: micro-batch segments compact to one; data and index row ids hold") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, String)]
-    val c = Columns.create(spark, tmpDir("graft-stream"), TableSpec(Seq(
-      ColumnSpec("id", PType.I64.id), ColumnSpec("s", PType.STR.id))))
-    val sink = StreamingIngest.sink(c)
+    val root = tmpDir("graft-nsink-compact") + "/store"
     val q = mem.toDF().toDF("id", "s").writeStream
-      .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) => sink(df, id))
-      .start()
-    mem.addData((1L, "a"), (2L, "b"))
-    q.processAllAvailable()
-    mem.addData((3L, "c"))
-    q.processAllAvailable()
-    q.stop()
-    assert(c.nrows == 3)
-    val out = c.read().collect().map(r => (r.getLong(1), r.getString(2))).sortBy(_._1)
-    assert(out.toSeq == Seq((1L, "a"), (2L, "b"), (3L, "c")))
-    // replaying a batch id FROM THE SAME QUERY must be a no-op
-    // (exactly-once); the lineage key is (queryId, batchId)
-    val df = c.read(Seq("id", "s")).select("id", "s")
-    sink(df.where($"id" === 1L), 50L)
-    assert(c.nrows == 4)
-    sink(df.where($"id" === 1L), 50L) // replay of (same query, batch 50)
-    assert(c.nrows == 4, "replayed batch 50 must be skipped")
-    // a DIFFERENT query's batch 0 is NOT the streamed query's batch 0: it
-    // must append, not be swallowed by the other query's lineage
-    sink(df.where($"id" === 2L).limit(0), 0L) // empty frame, new lineage
-    assert(c.store.segments.exists(s =>
-      c.store.segmentCommit(s).lineage == StreamingIngest.lineageFor("", 0L)),
-      "distinct query's batch 0 must commit its own segment")
-
-    // compaction: many micro-batch segments -> one, data + row ids intact
+      .format("graft").option("checkpointLocation", tmpDir("graft-nsink-compact-ckpt"))
+      .outputMode("append").start(root)
+    try {
+      Seq(Seq((1L, "a"), (2L, "b")), Seq((3L, "c")), Seq((1L, "d"))).foreach { batch =>
+        mem.addData(batch: _*)
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+    val c = Columns.open(spark, root)
+    assert(c.store.segments.size == 3, s"one segment per epoch: ${c.store.segments}")
     c("id").createIndex()
     val before = c.read().collect().map(_.toSeq).sortBy(_(0).asInstanceOf[Long])
-    assert(c.store.segments.size > 1)
     c.compactSegments()
     assert(c.store.segments == Seq(0L), s"segments: ${c.store.segments}")
     val after = c.read().collect().map(_.toSeq).sortBy(_(0).asInstanceOf[Long])
     assert(after.toSeq == before.toSeq)
     // index still valid (row ids preserved by the ordered rewrite)
-    assert(graft.index.RowIds.collectSorted(c("id") === 1L).length == 2)
+    val hits = graft.index.RowIds.collectSorted(c("id") === 1L)
+    assert(hits.length == 2)
+    assert(c.read(Seq("s"), graft.api.RowList(hits.toSeq)).select("s").collect()
+      .map(_.getString(0)).sorted.toSeq == Seq("a", "d"))
     c.dropStore()
   }
 

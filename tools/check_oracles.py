@@ -7,7 +7,8 @@ Reads <voutdir>/oracle_sql.json (dumped by graft.Verify), registers each
 <sfdir>/<table>.parquet as a DuckDB view, runs every oracle, and compares
 against the Spark parquet result in <voutdir>/<query>/ the same way the
 driver does: row count, column names, and a hash over values with columns
-sorted by name (rows sorted by all columns).
+sorted by name (rows sorted by all columns). An oracle whose query wrote no
+output dir (graft.Verify logs a failed query and moves on) is a FAIL.
 """
 import sys, os, json, glob
 import duckdb
@@ -66,6 +67,9 @@ def main():
             passes.append(name)
         except AssertionError as e:
             fails.append((name, str(e).splitlines()[-1][:200]))
+    for name in sorted(oracles):
+        if (not only or name in only) and not os.path.isdir(os.path.join(vout, name)):
+            fails.append((name, "missing output"))
     for n in passes:
         print(f"PASS  {n}")
     for n, rows in skipped:
