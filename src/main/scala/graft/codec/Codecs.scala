@@ -100,13 +100,7 @@ final case class CodecConfig(
     fsstSampleBytes: Int = 1 << 16,
     fsstGenerations: Int = 5,
     forceCodec: Int = -1,     // pin the inner codec (-1 = auto-select)
-    outerMode: Int = 0,       // 0 = trial, 1 = never zstd, 2 = prefer zstd
-    /** Write per-chunk membership filters (MemberFilter) for point-lookup
-      * pruning on unindexed columns; ~10 bits per DISTINCT value appended
-      * to the column file (never the tokens list column — filters only
-      * build for scalar int/float/string kinds).
-      */
-    chunkFilters: Boolean = true)
+    outerMode: Int = 0)       // 0 = trial, 1 = never zstd, 2 = prefer zstd
 
 object CodecConfig {
   val default: CodecConfig = CodecConfig()

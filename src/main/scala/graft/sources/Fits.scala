@@ -43,7 +43,7 @@ object Fits {
   private def pad(n: Long): Long = ((n + BlockSize - 1) / BlockSize) * BlockSize
 
   /** Read one header (2880-blocks until the END card) as keyword→value. */
-  private def readHeader(in: org.apache.hadoop.fs.FSDataInputStream,
+  private def readHeader(in: FsIO.RangeReader,
       start: Long): (Map[String, String], Long) = {
     val cards = mutable.LinkedHashMap.empty[String, String]
     var pos = start
@@ -103,7 +103,7 @@ object Fits {
     * default ext=1) and describe its binary table.
     */
   def describe(path: String, ext: Int = 1): BinTable = {
-    val in = FsIO.fs(path).open(new Path(path))
+    val in = new FsIO.RangeReader(path)
     try {
       var (h, dataStart) = readHeader(in, 0L)
       require(h.getOrElse("SIMPLE", "F") == "T", s"$path is not a FITS file")
@@ -178,7 +178,7 @@ object Fits {
 
   private def readRange(path: String, t: BinTable, from: Long,
       until: Long): Iterator[Row] = {
-    val in = FsIO.fs(path).open(new Path(path))
+    val in = new FsIO.RangeReader(path)
     var closed = false
     def close(): Unit = if (!closed) { closed = true; try in.close() catch { case _: Exception => } }
     // short-circuited consumption (limit/take) and task death must not leak
@@ -251,6 +251,28 @@ object Fits {
     * silently corrupting the fixed-stride records.
     */
   def writeBinTable(path: String, df: DataFrame): Unit = {
+    // positioned writes need every task AND the driver to see ONE file: a
+    // file:// scheme only proves that in local mode (same JVM/host). On a
+    // multi-node cluster each executor's RandomAccessFile would write its
+    // own node's local disk and the driver would publish its pre-sized
+    // zero-filled copy — a structurally valid FITS full of wrong rows. So
+    // the parallel path requires local mode, or the explicit assertion
+    // that the path is a SHARED POSIX mount (NFS/Lustre):
+    //   -Dgraft.fits.sharedFs=true
+    val uri = new Path(path).toUri
+    val localFile = uri.getScheme == null || uri.getScheme == "file"
+    writeBinTable(path, df, distributed = localFile &&
+      (df.sparkSession.sparkContext.isLocal ||
+        sys.props.get("graft.fits.sharedFs").contains("true")))
+  }
+
+  /** The serial driver-stream writer, whatever the filesystem (the
+    * bit-identity test compares it against the distributed one).
+    */
+  private[graft] def writeBinTableSerial(path: String, df: DataFrame): Unit =
+    writeBinTable(path, df, distributed = false)
+
+  private def writeBinTable(path: String, df: DataFrame, distributed: Boolean): Unit = {
     import org.apache.spark.sql.functions.{col => fcol, count, lit, max => fmax,
       octet_length, size => fsize}
     val schema = df.schema
@@ -322,20 +344,6 @@ object Fits {
     // never a truncated file whose header promises more rows than its data
     // holds.
     val tmpPath = path + ".tmp-" + java.util.UUID.randomUUID().toString.take(8)
-    val uri = new Path(path).toUri
-    // positioned writes need every task AND the driver to see ONE file: a
-    // file:// scheme only proves that in local mode (same JVM/host). On a
-    // multi-node cluster each executor's RandomAccessFile would write its
-    // own node's local disk and the driver would publish its pre-sized
-    // zero-filled copy — a structurally valid FITS full of wrong rows. So
-    // the parallel path requires local mode, or the explicit assertion
-    // that the path is a SHARED POSIX mount (NFS/Lustre):
-    //   -Dgraft.fits.sharedFs=true
-    val localFile = uri.getScheme == null || uri.getScheme == "file"
-    val distributed = localFile &&
-      (df.sparkSession.sparkContext.isLocal ||
-        sys.props.get("graft.fits.sharedFs").contains("true")) &&
-      !sys.props.get("graft.fits.serialExport").contains("true")
     var committed = false
     try {
       if (distributed)
@@ -392,7 +400,7 @@ object Fits {
   private def writeSerial(tmpPath: String, df: DataFrame, schema: StructType,
       defs: Array[(String, String, Int, Int)], header: Array[Byte],
       nrows: Long, rowBytes: Int): Unit = {
-    val os = FsIO.fs(tmpPath).create(new Path(tmpPath), true)
+    val os = FsIO.createOut(tmpPath)
     try {
       os.write(header)
       var dataBytes = 0L

@@ -204,9 +204,8 @@ object ColumnStore {
       while (c < cols.length) {
         tmpNames(c) = s"$segDir/${Format.colFile(part, cols(c).name)}" +
           ".tmp-" + java.util.UUID.randomUUID().toString.take(8)
-        // createOut: Hadoop stream off-local; nio + hand-written Hadoop-
-        // compatible .crc sidecar on local paths (read-path verification
-        // unchanged, no per-file chmod fork)
+        // createOut: Hadoop stream off-local, plain nio on local paths;
+        // each chunk's CRC32C goes into the manifest and is checked on read
         streams(c) = FsIO.createOut(tmpNames(c))
         c += 1
       }
@@ -220,8 +219,7 @@ object ColumnStore {
       // membership filter interleaved AFTER its chunk in the same file:
       // chunk reads stay exact ranged reads, and the few-KB filter region
       // is what an unindexed point lookup reads INSTEAD of the chunk
-      val filter = if (cfg.chunkFilters) graft.codec.MemberFilter.fromVec(vec)
-        else None
+      val filter = graft.codec.MemberFilter.fromVec(vec)
       filter.foreach(streams(c).write)
       val (fk, fOff, fLen) = filter match {
         case Some(f) => (1, offsets(c) + blob.length, f.length.toLong)

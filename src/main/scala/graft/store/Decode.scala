@@ -16,13 +16,6 @@ import scala.collection.mutable
   */
 object Decode {
 
-  /** Chunk integrity checking on read (CRC32C vs the manifest), enabled
-    * with -Dgraft.verify.crc=true. Off by default: the reference does not
-    * checksum reads either, and the cost is ~15%% of decode time.
-    */
-  private val verifyCrc: Boolean =
-    java.lang.Boolean.getBoolean("graft.verify.crc")
-
   /** Diagnostic counters, JVM-local (exact under local[*], per-executor on
     * a cluster): chunk payloads read+decoded, and chunks skipped by a
     * membership-filter probe. Tests and the driver correctness queries use
@@ -31,31 +24,30 @@ object Decode {
   val chunksRead = new java.util.concurrent.atomic.AtomicLong()
   val chunksFilterSkipped = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Reject a chunk blob whose CRC32C differs from its manifest entry. */
-  private[store] def checkCrc(cm: ChunkMeta, blob: Array[Byte]): Unit = {
+  /** Read one chunk blob and reject it unless its CRC32C equals the
+    * manifest entry — the one integrity check behind every chunk read
+    * (decode, COW update, vacuum), on every filesystem. A bit flip inside
+    * an RLE or FOR payload would otherwise decode silently into wrong data.
+    */
+  private[store] def readChunk(in: FsIO.RangeReader, cm: ChunkMeta): Array[Byte] = {
+    val blob = in.read(cm.offset, cm.nbytes.toInt)
     val crc = FsIO.crc32c(blob)
     if (crc != cm.crc) throw new java.io.IOException(
       s"chunk CRC mismatch in ${cm.file} @${cm.offset}: " +
         f"manifest ${cm.crc}%08x, read $crc%08x (corruption or torn write)")
+    blob
   }
 
   /** Per-unit file handle cache: a unit decodes many chunks from the same
-    * column file — open it ONCE and issue positioned reads, instead of an
-    * open/close round-trip per chunk (on an object store, per-chunk opens
-    * dominate the read path).
+    * column file — open it ONCE and issue positioned reads.
     */
   private final class BlobReader(root: String, segment: Long) {
     private val dir = Format.segDir(root, segment)
-    private val open = mutable.HashMap.empty[String, org.apache.hadoop.fs.FSDataInputStream]
+    private val open = mutable.HashMap.empty[String, FsIO.RangeReader]
 
     def read(cm: ChunkMeta): Array[Byte] = {
       chunksRead.incrementAndGet()
-      val in = open.getOrElseUpdate(cm.file,
-        FsIO.fs(dir).open(new org.apache.hadoop.fs.Path(s"$dir/${cm.file}")))
-      val buf = new Array[Byte](cm.nbytes.toInt)
-      in.readFully(cm.offset, buf)
-      if (verifyCrc) checkCrc(cm, buf)
-      buf
+      readChunk(open.getOrElseUpdate(cm.file, new FsIO.RangeReader(s"$dir/${cm.file}")), cm)
     }
 
     def close(): Unit = {
@@ -77,8 +69,8 @@ object Decode {
     * Sound because pushed filters are top-level conjuncts and every probe
     * hash is canonical (see GraftScan.filterProbes): a chunk whose filter
     * excludes ALL probe values of some conjunct can satisfy none of the
-    * unit's rows in that chunk's row range. Chunks without filters (filters
-    * disabled, bool/binary kinds) and unreadable/corrupt filters survive
+    * unit's rows in that chunk's row range. Chunks without filters (bool/
+    * binary/list kinds) and unreadable/corrupt filters survive
     * conservatively; Spark re-applies every filter as residual.
     */
   def refineUnit(u: DecodeUnit,

@@ -327,13 +327,11 @@ object FsIO {
   // write-and-rename, vs 0.16 ms through java.nio) and a per-entry stat on
   // listings. Metadata traffic (manifests, commit records, claims, index
   // metas) is pure per-operation fixed cost at ANY scale, so on local paths
-  // (scheme null or file://) these ops route through java.nio; hdfs/s3a
-  // keep the Hadoop path unchanged. Chunk DATA streams (fs(path).create /
-  // open) stay on Hadoop, so ChecksumFileSystem .crc sidecars still cover
-  // bulk data; the nio ops maintain sidecar hygiene — delete/rename/
-  // overwrite carry or drop the sibling `.name.crc` — and listings filter
-  // sidecars exactly like ChecksumFileSystem.listStatus does, so the two
-  // layers never disagree about directory contents.
+  // (scheme null or file://) every op — metadata AND chunk data streams —
+  // routes through java.nio; hdfs/s3a keep the Hadoop path unchanged. No
+  // Hadoop `.crc` sidecars are written or read: every chunk read is checked
+  // against its manifest CRC32C (Decode.readChunk) and every membership
+  // filter carries its own CRC32C, on every filesystem alike.
 
   private def localOf(path: String): java.nio.file.Path = {
     val uri = new Path(path).toUri
@@ -342,17 +340,11 @@ object FsIO {
     else null
   }
 
-  private def crcSibling(p: java.nio.file.Path): java.nio.file.Path =
-    p.resolveSibling("." + p.getFileName.toString + ".crc")
-
   /** Hadoop create() makes parent dirs implicitly; the nio writers match that. */
   private def createParents(p: java.nio.file.Path): Unit = {
     val parent = p.getParent
     if (parent != null) java.nio.file.Files.createDirectories(parent)
   }
-
-  private def isCrcSidecar(name: String): Boolean =
-    name.startsWith(".") && name.endsWith(".crc")
 
   def exists(path: String): Boolean = {
     val lp = localOf(path)
@@ -395,9 +387,6 @@ object FsIO {
       java.nio.file.Files.move(tmp, lp,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      // a Hadoop-written predecessor leaves a sidecar describing the OLD
-      // bytes; a later checksummed open would fail on the new content
-      java.nio.file.Files.deleteIfExists(crcSibling(lp))
       return
     }
     val f = fs(path)
@@ -426,44 +415,57 @@ object FsIO {
     buf
   }
 
-  def readRange(path: String, offset: Long, nbytes: Int): Array[Byte] = {
-    val lp = localOf(path)
-    val buf = new Array[Byte](nbytes)
-    if (lp != null) {
-      val ch = java.nio.channels.FileChannel.open(lp,
-        java.nio.file.StandardOpenOption.READ)
-      try {
-        val bb = java.nio.ByteBuffer.wrap(buf)
-        var pos = offset
-        while (bb.hasRemaining) {
-          val n = ch.read(bb, pos)
-          if (n < 0) throw new java.io.EOFException(
-            s"EOF at $pos reading [$offset, ${offset + nbytes}) of $path")
-          pos += n
-        }
-      } finally ch.close()
-      return buf
+  /** One open file serving positioned reads: a FileChannel on local paths,
+    * an FSDataInputStream elsewhere. A decode unit reads many chunks of the
+    * same column file through one handle instead of an open per chunk (on
+    * an object store, per-chunk opens dominate the read path).
+    */
+  final class RangeReader(path: String) extends AutoCloseable {
+    private val ch: java.nio.channels.FileChannel = {
+      val lp = localOf(path)
+      if (lp == null) null
+      else java.nio.channels.FileChannel.open(lp, java.nio.file.StandardOpenOption.READ)
     }
-    val in = fs(path).open(new Path(path))
-    try in.readFully(offset, buf) finally in.close()
-    buf
+    private val in: org.apache.hadoop.fs.FSDataInputStream =
+      if (ch == null) fs(path).open(new Path(path)) else null
+
+    /** Fill `buf` with the bytes at [offset, offset + buf.length). */
+    def readFully(offset: Long, buf: Array[Byte]): Unit = {
+      if (ch == null) { in.readFully(offset, buf); return }
+      val bb = java.nio.ByteBuffer.wrap(buf)
+      var pos = offset
+      while (bb.hasRemaining) {
+        val n = ch.read(bb, pos)
+        if (n < 0) throw new java.io.EOFException(
+          s"EOF at $pos reading [$offset, ${offset + buf.length}) of $path")
+        pos += n
+      }
+    }
+
+    def read(offset: Long, nbytes: Int): Array[Byte] = {
+      val buf = new Array[Byte](nbytes)
+      readFully(offset, buf)
+      buf
+    }
+
+    def close(): Unit = if (ch != null) ch.close() else in.close()
+  }
+
+  def readRange(path: String, offset: Long, nbytes: Int): Array[Byte] = {
+    val r = new RangeReader(path)
+    try r.read(offset, nbytes) finally r.close()
   }
 
   def list(dir: String): Seq[String] = {
     metaOps.incrementAndGet()
     val lp = localOf(dir)
     if (lp != null) {
-      // filter checksum sidecars exactly like ChecksumFileSystem.listStatus,
-      // so callers see the same namespace as through the Hadoop path
       val out = scala.collection.mutable.ArrayBuffer.empty[String]
       try {
         val s = java.nio.file.Files.newDirectoryStream(lp)
         try {
           val it = s.iterator()
-          while (it.hasNext) {
-            val n = it.next().getFileName.toString
-            if (!isCrcSidecar(n)) out += n
-          }
+          while (it.hasNext) out += it.next().getFileName.toString
         } finally s.close()
       } catch { case _: java.nio.file.NoSuchFileException |
                      _: java.nio.file.NotDirectoryException => return Seq.empty }
@@ -491,12 +493,7 @@ object FsIO {
             Files.deleteIfExists(d); FileVisitResult.CONTINUE
           }
         })
-      } else {
-        // keep the Hadoop-side contract: a checksummed file's sidecar dies
-        // with it, never lingering to poison a same-named successor
-        java.nio.file.Files.deleteIfExists(lp)
-        java.nio.file.Files.deleteIfExists(crcSibling(lp))
-      }
+      } else java.nio.file.Files.deleteIfExists(lp)
       return
     }
     val f = fs(path)
@@ -508,15 +505,6 @@ object FsIO {
     val lt = localOf(to)
     if (lf != null && lt != null) {
       java.nio.file.Files.move(lf, lt, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      // carry a Hadoop-written source's checksum sidecar to the new name
-      // (ChecksumFileSystem.rename does the same); drop any stale target one
-      val fromCrc = crcSibling(lf)
-      val toCrc = crcSibling(lt)
-      if (java.nio.file.Files.exists(fromCrc))
-        java.nio.file.Files.move(fromCrc, toCrc,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      else java.nio.file.Files.deleteIfExists(toCrc)
       return
     }
     if (!fs(from).rename(new Path(from), new Path(to)))
@@ -555,66 +543,16 @@ object FsIO {
     c.getValue
   }
 
-  /** Create an output stream for a DATA file (chunk payloads). Non-local
-    * schemes go through the Hadoop filesystem unchanged. Local paths use a
-    * java.nio stream that ALSO writes a Hadoop-ChecksumFileSystem-
-    * COMPATIBLE `.name.crc` sidecar on close (public format: "crc\0"
-    * header + big-endian int bytesPerSum + one CRC32 per data block) — so
-    * the read path through the Hadoop LocalFileSystem keeps verifying
-    * every chunk read exactly as before, without paying the forked chmod
-    * the Hadoop create does per file when native IO is absent (~7 ms in
-    * this sandbox; a partition encoder opens one stream per column).
-    * Compatibility is proven by a unit test that writes through this path,
-    * reads through the checksummed Hadoop fs, then flips a byte and
-    * demands a ChecksumException.
+  /** Create an output stream for a DATA file (chunk payloads): the Hadoop
+    * filesystem off-local, a buffered java.nio stream on local paths (the
+    * Hadoop local create forks a chmod per file when native IO is absent,
+    * and a partition encoder opens one stream per column). Integrity comes
+    * from the per-chunk CRC32C in the manifest, not from the filesystem.
     */
   def createOut(path: String): java.io.OutputStream = {
     val lp = localOf(path)
     if (lp == null) return fs(path).create(new Path(path), true)
-    val bytesPerSum = conf.getInt("file.bytes-per-checksum", 512)
     createParents(lp)
-    val dataOut = java.nio.file.Files.newOutputStream(lp)
-    new java.io.BufferedOutputStream(dataOut, 1 << 16) {
-      private val crc = new java.util.zip.CRC32()
-      private val sums = new java.io.ByteArrayOutputStream(256)
-      private var inBlock = 0
-      private def feed(b: Array[Byte], off: Int, len: Int): Unit = {
-        var o = off
-        var n = len
-        while (n > 0) {
-          val take = math.min(n, bytesPerSum - inBlock)
-          crc.update(b, o, take)
-          inBlock += take
-          if (inBlock == bytesPerSum) flushSum()
-          o += take
-          n -= take
-        }
-      }
-      private def flushSum(): Unit = {
-        val v = crc.getValue.toInt
-        sums.write((v >>> 24) & 0xff); sums.write((v >>> 16) & 0xff)
-        sums.write((v >>> 8) & 0xff); sums.write(v & 0xff)
-        crc.reset()
-        inBlock = 0
-      }
-      override def write(b: Int): Unit = {
-        super.write(b)
-        feed(Array(b.toByte), 0, 1)
-      }
-      override def write(b: Array[Byte], off: Int, len: Int): Unit = {
-        super.write(b, off, len)
-        feed(b, off, len)
-      }
-      override def close(): Unit = {
-        super.close()
-        if (inBlock > 0) flushSum()
-        val head = new java.io.ByteArrayOutputStream(16)
-        head.write('c'); head.write('r'); head.write('c'); head.write(0)
-        head.write((bytesPerSum >>> 24) & 0xff); head.write((bytesPerSum >>> 16) & 0xff)
-        head.write((bytesPerSum >>> 8) & 0xff); head.write(bytesPerSum & 0xff)
-        head.write(sums.toByteArray)
-        java.nio.file.Files.write(crcSibling(lp), head.toByteArray)
-      }
-    }
+    new java.io.BufferedOutputStream(java.nio.file.Files.newOutputStream(lp), 1 << 16)
   }
 }

@@ -299,8 +299,7 @@ object Mutate {
       val cow = Format.cowFile(t.part, t.colName, cm.chunkIdx, newVer)
       // filter appended after the chunk in the cow file — updated values
       // must re-enter it or point lookups would miss them
-      val filter = if (cfg.chunkFilters) graft.codec.MemberFilter.fromVec(vec)
-        else None
+      val filter = graft.codec.MemberFilter.fromVec(vec)
       FsIO.writeAtomic(s"$dir/$cow", filter.fold(newBlob)(newBlob ++ _))
       val (fk, fOff, fLen) = filter match {
         case Some(f) => (1, newBlob.length.toLong, f.length.toLong)
@@ -371,8 +370,7 @@ object Mutate {
       val vec = anyToVec(cs.ptype, slice)
       val (blob, info) = Chunk.encodeWithInfo(vec, colCfg)
       val cow = Format.cowFile(t.part, t.colName, ci, newVer)
-      val filter = if (cfg.chunkFilters) graft.codec.MemberFilter.fromVec(vec)
-        else None
+      val filter = graft.codec.MemberFilter.fromVec(vec)
       FsIO.writeAtomic(s"$dir/$cow", filter.fold(blob)(blob ++ _))
       val (fk, fOff, fLen) = filter match {
         case Some(f) => (1, blob.length.toLong, f.length.toLong)
@@ -405,13 +403,12 @@ object Mutate {
   }
 
   /** A chunk blob checked against its manifest CRC32C before a COW update
-    * or vacuum rewrites it: the rewrite gets a fresh CRC (and sidecar), so
-    * a flipped bit copied unchecked would be certified as good data.
+    * or vacuum rewrites it: the rewrite gets a fresh CRC, so a flipped bit
+    * copied unchecked would be certified as good data.
     */
   private def readVerified(dir: String, cm: ChunkMeta): Array[Byte] = {
-    val blob = FsIO.readRange(s"$dir/${cm.file}", cm.offset, cm.nbytes.toInt)
-    Decode.checkCrc(cm, blob)
-    blob
+    val in = new FsIO.RangeReader(s"$dir/${cm.file}")
+    try Decode.readChunk(in, cm) finally in.close()
   }
 
   // ---------------------------------------------------------------- vacuum

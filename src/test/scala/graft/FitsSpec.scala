@@ -98,9 +98,7 @@ class FitsSpec extends AnyFunSuite {
     val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 7), schema)
     val base = tmpDir("graft-fits-dist")
     Fits.writeBinTable(s"$base/par.fits", df)
-    sys.props("graft.fits.serialExport") = "true"
-    try Fits.writeBinTable(s"$base/ser.fits", df)
-    finally sys.props.remove("graft.fits.serialExport")
+    Fits.writeBinTableSerial(s"$base/ser.fits", df)
     val a = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$base/par.fits"))
     val b = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$base/ser.fits"))
     assert(a.length == b.length, s"sizes differ: ${a.length} vs ${b.length}")

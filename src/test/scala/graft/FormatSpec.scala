@@ -9,42 +9,6 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class FormatSpec extends AnyFunSuite {
 
-  test("createOut sidecar is Hadoop-ChecksumFileSystem compatible (verify + corruption)") {
-    val base = s"/tmp/graft-crc-${java.util.UUID.randomUUID().toString.take(8)}"
-    FsIO.mkdirs(base)
-    val rnd = new java.util.Random(31)
-    // sizes around the 512-byte block boundary and a multi-block payload
-    for (n <- Seq(1, 511, 512, 513, 4096, 70000)) {
-      val path = s"$base/f$n.bin"
-      val data = new Array[Byte](n)
-      rnd.nextBytes(data)
-      val out = FsIO.createOut(path)
-      try out.write(data) finally out.close()
-      // read through the CHECKSUMMED Hadoop local fs: must verify clean
-      val in = FsIO.fs(path).open(new org.apache.hadoop.fs.Path(path))
-      val back = new Array[Byte](n)
-      try in.readFully(0, back) finally in.close()
-      assert(java.util.Arrays.equals(back, data), s"n=$n")
-      // flip one byte in the DATA file: the hadoop read must now fail on
-      // OUR sidecar — proving the sidecar actually guards the bytes
-      val raf = new java.io.RandomAccessFile(path, "rw")
-      try {
-        val pos = n / 2
-        raf.seek(pos)
-        val b = raf.read()
-        raf.seek(pos)
-        raf.write(b ^ 0x40)
-      } finally raf.close()
-      val in2 = FsIO.fs(path).open(new org.apache.hadoop.fs.Path(path))
-      try {
-        intercept[org.apache.hadoop.fs.ChecksumException] {
-          in2.readFully(0, new Array[Byte](n))
-        }
-      } finally in2.close()
-    }
-    FsIO.delete(base, recursive = true)
-  }
-
   test("TableSpec round trip with fills, widths, added-at") {
     val spec = TableSpec(Seq(
       ColumnSpec("a", PType.I64.id),

@@ -267,14 +267,9 @@ class StoreSpec extends AnyFunSuite {
     st.dropStore()
   }
 
-  test("vacuum and COW updates refuse a chunk that fails its manifest CRC") {
-    val (st, _) = mkStore(500, chunkRows = 50, parts = 1)
-    Mutate.update(spark, st, "rand", Array(3L), Array(1.5f))
-    val live = st.partManifest(0L, 0)
-    // flip one byte inside an `id` chunk, which vacuum copies unchanged
-    val cm = live.chunks.filter(_.column == "id").maxBy(_.rowStartLocal)
-    val raf = new java.io.RandomAccessFile(
-      s"${Format.segDir(st.root, 0L)}/${cm.file}", "rw")
+  /** Flip one bit of the byte in the middle of a chunk's payload. */
+  private def corruptChunk(st: ColumnStore, seg: Long, cm: ChunkMeta): Unit = {
+    val raf = new java.io.RandomAccessFile(s"${Format.segDir(st.root, seg)}/${cm.file}", "rw")
     try {
       val pos = cm.offset + cm.nbytes / 2
       raf.seek(pos)
@@ -282,9 +277,19 @@ class StoreSpec extends AnyFunSuite {
       raf.seek(pos)
       raf.write(b ^ 0x40)
     } finally raf.close()
-    def crcFailure(e: Throwable): Boolean =
-      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
-        .exists(t => String.valueOf(t.getMessage).contains("CRC mismatch"))
+  }
+
+  private def crcFailure(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("CRC mismatch"))
+
+  test("vacuum and COW updates refuse a chunk that fails its manifest CRC") {
+    val (st, _) = mkStore(500, chunkRows = 50, parts = 1)
+    Mutate.update(spark, st, "rand", Array(3L), Array(1.5f))
+    val live = st.partManifest(0L, 0)
+    // flip one byte inside an `id` chunk, which vacuum copies unchanged
+    val cm = live.chunks.filter(_.column == "id").maxBy(_.rowStartLocal)
+    corruptChunk(st, 0L, cm)
     val e = intercept[Exception](Mutate.vacuum(spark, st))
     assert(crcFailure(e), s"vacuum did not report the corrupt chunk: $e")
     val reopened = ColumnStore.open(st.root)
@@ -295,6 +300,85 @@ class StoreSpec extends AnyFunSuite {
     assert(crcFailure(e2), s"update did not report the corrupt chunk: $e2")
     assert(ColumnStore.open(st.root).partManifest(0L, 0) == live)
     st.dropStore()
+  }
+
+  // one case per way a chunk reaches disk: the encoder's column file, a
+  // vacuum generation file and a COW update's per-chunk file (name pattern
+  // of the `id` chunk file to corrupt after the preparing step)
+  private val corruptionCases: Seq[(String, ColumnStore => Unit, String)] = Seq(
+    ("encoded chunk", _ => (), """p0\.id\.bin"""),
+    ("vacuum-generation chunk", st => {
+      Mutate.update(spark, st, "id", Array(3L), Array[Any](3L))
+      Mutate.vacuum(spark, st)
+    }, """p0\.id\.g\d+\.bin"""),
+    ("COW chunk", st => Mutate.update(spark, st, "id", Array(3L), Array[Any](3L)),
+      """p0\.id\.c\d+\.v\d+\.bin"""))
+
+  for ((name, prepare, filePattern) <- corruptionCases)
+    test(s"a flipped chunk byte fails the read with a CRC mismatch: $name") {
+      val (st, _) = mkStore(500, chunkRows = 50, parts = 1)
+      prepare(st)
+      val cm = st.partManifest(0L, 0).chunks.find(_.file.matches(filePattern))
+      assert(cm.isDefined, s"no chunk in a file matching $filePattern")
+      corruptChunk(st, 0L, cm.get)
+      val c = graft.api.Columns.open(spark, st.root)
+      val e1 = intercept[Exception](
+        c.read(rows = graft.api.RowList(0L until c.nrows)).collect())
+      assert(crcFailure(e1), s"Columns.read did not report the corrupt chunk: $e1")
+      val e2 = intercept[Exception](spark.read.format("graft").load(st.root).collect())
+      assert(crcFailure(e2), s"DSv2 scan did not report the corrupt chunk: $e2")
+      st.dropStore()
+    }
+
+  test("no .crc file anywhere under a store root after any write path") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val root = tmpDir("graft-nocrc") + "/store"
+    val r = java.nio.file.Paths.get(root)
+    // Spark writes the index's Parquet dirs through Hadoop, checksums and all
+    def crcFiles(): List[String] = {
+      val s = java.nio.file.Files.walk(r)
+      try s.iterator().asScala.map(r.relativize(_)).filter { rel =>
+        rel.getFileName.toString.endsWith(".crc") && !rel.iterator().asScala
+          .map(_.toString).exists(n => n.startsWith("_base-") || n.startsWith("_gen-"))
+      }.map(_.toString).toList
+      finally s.close()
+    }
+    def check(step: String): Unit = {
+      val found = crcFiles()
+      assert(found.isEmpty, s"after $step: $found")
+    }
+    def batch(from: Long, n: Int): DataFrame =
+      (from until from + n).map(i => (i, s"s$i")).toDF("id", "s").repartition(2)
+    val c = graft.api.Columns.fromDataFrame(spark, root, batch(0L, 300), chunkRows = 50)
+    check("create + first append")
+    c("id").createIndex()
+    check("Index.create")
+    c.append(batch(300L, 100))
+    check("append")
+    graft.index.Index.refresh(spark, c.store, "id")
+    check("Index.refresh")
+    c("s").update(Seq(3L, 350L), Seq("x", "y"))
+    check("COW update")
+    c.vacuum()
+    check("vacuum")
+    val mem = MemoryStream[(Long, String)]
+    val q = mem.toDF().toDF("id", "s").writeStream.format("graft")
+      .option("checkpointLocation", tmpDir("graft-nocrc-ckpt"))
+      .outputMode("append").start(root)
+    try { mem.addData((400L, "s400"), (401L, "s401")); q.processAllAvailable() }
+    finally q.stop()
+    check("native streaming sink epoch")
+    batch(402L, 50).write.format("graft").mode("append").save(root)
+    check("DSv2 write")
+    val reopened = graft.api.Columns.open(spark, root)
+    assert(reopened.nrows == 452L)
+    reopened.compactSegments()
+    check("compactSegments")
+    assert(graft.api.Columns.open(spark, root).nrows == 452L)
+    reopened.dropStore()
   }
 
   test("resume: incomplete segment re-encodes only missing partitions (north rule)") {
