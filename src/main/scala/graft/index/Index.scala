@@ -1,9 +1,21 @@
 package graft.index
 
-import graft.codec.Bytes
+import graft.codec.{Bytes, PType}
+import graft.sources.GraftScan
 import graft.store.{ColumnStore, FsIO, SelRange}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate, Operators}
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter, RecordMaterializer}
+import org.apache.parquet.schema.MessageType
+import org.apache.spark.internal.Logging
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Secondary index per column — the Spark-native replacement for the
   * reference's `.index`/`.sorted`/`.index1` trio (pycolumns
@@ -15,17 +27,24 @@ import org.apache.spark.sql.functions._
   * (in-memory argsort and the external k-way mergesort, mergesort.py) —
   * SURVEY.md §2.3 I1-I3: do not reimplement.
   *
-  * Lookup: because rows are globally value-sorted, Parquet row-group
-  * min/max statistics are exactly the reference's coarse `index1` zone map
-  * (every-10,000th sorted value, column.py:584-613): a `WHERE value > v`
-  * prunes row groups the same way the in-RAM bisect prunes 10k-row windows,
-  * then Catalyst's pushed filter refines within groups. Results are row-id
-  * sets in value order (the reference's contract: `Indices`, value-sorted).
+  * Lookup: because rows are globally value-sorted, Parquet row-group and
+  * page min/max statistics are exactly the reference's coarse `index1`
+  * zone map (every-10,000th sorted value, column.py:584-613). A narrow
+  * predicate is answered on the driver by [[probe]], the analogue of the
+  * reference's in-process bisect plus its few `.sorted` probes
+  * (column.py:743-839): parquet-mr opens the base and generation files
+  * with the predicate pushed, skips row groups by their statistics and
+  * pages by the column index, and returns only the matching row ids — no
+  * Spark job. A predicate the probe cannot translate exactly, or one that
+  * matches more than `ProbeBound` rows, runs as a Spark job over [[table]]
+  * instead, so driver memory is bounded by a constant, never by the data.
+  * Results are row-id sets in value order (the reference's contract:
+  * `Indices`, value-sorted).
   *
   * Tie-break by row_id (documented divergence: numpy argsort tie order is
   * unspecified; reference tests use tie-free data).
   */
-object Index {
+object Index extends Logging {
 
   final val ValueCol = "value"
   final val RowIdCol = "row_id"
@@ -65,6 +84,8 @@ object Index {
   private[graft] final case class IdxMeta(rows: Long, stamp: Long,
       gens: Seq[(String, Long)], base: String) {
     def deltaRows: Long = gens.map(_._2).sum
+    /** Run directory names: the base sort, then each delta generation. */
+    def runs: Seq[String] = base +: gens.map(_._1)
   }
 
   private val utf8 = java.nio.charset.StandardCharsets.UTF_8
@@ -252,25 +273,46 @@ object Index {
   private[graft] def deltaGens(store: ColumnStore, col: String): Seq[String] =
     readMeta(store, col).gens.map(_._1)
 
-  /** Every parquet path of the index: the base sort plus the meta-listed
-    * delta generations. ALL index readers (API lookups, DSv2 routing) go
-    * through this — gen dirs are underscore-prefixed, so the base read
-    * never double-counts them, and unlisted (orphaned) gens are invisible.
-    *
-    * The schema is declared explicitly (it is fixed by construction:
-    * `value` = the column's type, `row_id` = long), so the read skips the
-    * per-call parquet footer inference — index lookups are issued once per
-    * query operator and the footer round-trips were pure fixed cost.
+  /** `part-*.parquet` names in one index run directory (a base sort or a
+    * delta generation), in partition order — Spark names output files in
+    * partition order, so for a base this is value order. Spark's `_SUCCESS`,
+    * Hadoop's `.crc` files and GC tombstones are skipped; a missing
+    * directory lists as empty.
     */
-  def table(spark: SparkSession, store: ColumnStore, col: String): DataFrame = {
+  private[graft] def partFiles(runDir: String): Seq[String] =
+    FsIO.list(runDir).filter(f => f.startsWith("part-") && f.endsWith(".parquet")).sorted
+
+  /** Full paths of the parquet files of `runs` (run directory names under
+    * the index dir, e.g. `IdxMeta.runs`). Every index reader goes through
+    * this explicit list —
+    * the run directories are underscore-prefixed, which Spark treats as
+    * hidden when handed a directory, and unlisted (orphaned) runs stay
+    * invisible. A run listed by the meta but missing on disk raises, so a
+    * consult against a vanished run fails instead of reading as empty.
+    */
+  private[graft] def files(store: ColumnStore, col: String, runs: Seq[String]): Seq[String] = {
     val d = dir(store, col)
-    val m = readMeta(store, col)
-    val paths = (m.base +: m.gens.map(_._1)).map(p => s"$d/$p")
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(ValueCol,
-        graft.store.ColumnStore.sparkType(store.spec.col(col).ptype)),
-      org.apache.spark.sql.types.StructField(RowIdCol,
-        org.apache.spark.sql.types.LongType)))
+    runs.flatMap { r =>
+      val files = partFiles(s"$d/$r")
+      if (files.isEmpty && !FsIO.exists(s"$d/$r"))
+        throw new java.io.FileNotFoundException(s"index run $d/$r is missing")
+      files.map(f => s"$d/$r/$f")
+    }
+  }
+
+  /** The index as a DataFrame: base sort plus the meta-listed delta
+    * generations. The schema is declared explicitly (it is fixed by
+    * construction: `value` = the column's type, `row_id` = long), so the
+    * read skips the per-call parquet footer inference.
+    */
+  def table(spark: SparkSession, store: ColumnStore, col: String): DataFrame =
+    readFiles(spark, store, col, files(store, col, readMeta(store, col).runs))
+
+  private def readFiles(spark: SparkSession, store: ColumnStore, col: String,
+      paths: Seq[String]): DataFrame = {
+    val schema = StructType(Seq(
+      StructField(ValueCol, ColumnStore.sparkType(store.spec.col(col).ptype)),
+      StructField(RowIdCol, LongType)))
     spark.read.schema(schema).parquet(paths: _*)
   }
 
@@ -336,7 +378,7 @@ object Index {
       if (merge) {
         // collapse every gen + the new rows into ONE generation — reads
         // only delta data, the base sort is untouched
-        val old = spark.read.parquet(m.gens.map(g => s"$d/${g._1}"): _*)
+        val old = readFiles(spark, store, col, files(store, col, m.gens.map(_._1)))
         (old.unionAll(fresh), m.deltaRows + newRows, Seq.empty[(String, Long)])
       } else (fresh, newRows, m.gens)
     val parts = math.max(1, math.min(2048, (genRows / (2L << 20)).toInt + 1))
@@ -381,7 +423,7 @@ object Index {
       try Some(parseMeta(FsIO.readAll(s"$d/$name")))
       catch { case _: Exception => None }
     }
-    val live: Set[String] = metas.flatMap(m => m.base +: m.gens.map(_._1)).toSet
+    val live: Set[String] = metas.flatMap(_.runs).toSet
     FsIO.list(d)
       .filter(f => f.startsWith("_gen-") || f.startsWith("_base-"))
       .foreach { f =>
@@ -407,61 +449,215 @@ object Index {
       }
   }
 
-  private def load(spark: SparkSession, store: ColumnStore, col: String): DataFrame = {
-    require(exists(store, col),
-      s"column $col has no index (reference raises, column.py:476-481)")
-    table(spark, store, col)
+  // ------------------------------------------------------- driver probe
+
+  /** Most row ids [[probe]] materializes on the driver; one more and the
+    * caller runs the Spark job instead. Equal to the DSv2 route's bucket
+    * cap, so a probed route never yields more buckets than a job would.
+    */
+  private[graft] final val ProbeBound = 1 << 16
+
+  /** One probe hit: the value's sort key (`bytes` for strings, `key` for
+    * integers) and its row id.
+    */
+  private final case class Hit(key: Long, bytes: Array[Byte], rowId: Long)
+
+  /** Spark's order over (value, row_id): integers signed, strings as
+    * unsigned bytes (UTF8String's binary order).
+    */
+  private val hitOrder: Ordering[Hit] = (a, b) => {
+    val c =
+      if (a.bytes != null) java.util.Arrays.compareUnsigned(a.bytes, b.bytes)
+      else java.lang.Long.compare(a.key, b.key)
+    if (c != 0) c else java.lang.Long.compare(a.rowId, b.rowId)
+  }
+
+  /** Materializes (value, row_id) records. parquet-mr's record filter asks
+    * for the current record only when the row passes the predicate, so only
+    * matching rows become [[Hit]]s.
+    */
+  private object HitReadSupport extends ReadSupport[Hit] {
+    override def init(ctx: InitContext): ReadSupport.ReadContext =
+      new ReadSupport.ReadContext(ctx.getFileSchema)
+
+    override def prepareForRead(conf: org.apache.hadoop.conf.Configuration,
+        meta: java.util.Map[String, String], schema: MessageType,
+        ctx: ReadSupport.ReadContext): RecordMaterializer[Hit] =
+      new RecordMaterializer[Hit] {
+        private var key = 0L
+        private var bytes: Array[Byte] = null
+        private var rowId = 0L
+        private val value = new PrimitiveConverter {
+          override def addInt(v: Int): Unit = key = v
+          override def addLong(v: Long): Unit = key = v
+          override def addBinary(v: Binary): Unit = bytes = v.getBytes
+        }
+        private val id = new PrimitiveConverter {
+          override def addLong(v: Long): Unit = rowId = v
+        }
+        private val valueAt = schema.getFieldIndex(ValueCol)
+        private val root = new GroupConverter {
+          override def getConverter(i: Int): Converter = if (i == valueAt) value else id
+          override def start(): Unit = bytes = null
+          override def end(): Unit = ()
+        }
+        override def getCurrentRecord: Hit = Hit(key, bytes, rowId)
+        override def getRootConverter: GroupConverter = root
+      }
+  }
+
+  /** The conjunction `filters` as a parquet-mr predicate on column `c`;
+    * None unless every filter is a comparison or non-empty IN whose
+    * literals `lit` accepts (the column's exact type).
+    */
+  private def predicate[T <: Comparable[T],
+      C <: Operators.Column[T] with Operators.SupportsLtGt](
+      c: C, lit: PartialFunction[Any, T], filters: Seq[Filter]): Option[FilterPredicate] = {
+    def one(f: Filter): Option[FilterPredicate] = f match {
+      case EqualTo(_, v) if lit.isDefinedAt(v) => Some(FilterApi.eq(c, lit(v)))
+      case GreaterThan(_, v) if lit.isDefinedAt(v) => Some(FilterApi.gt(c, lit(v)))
+      case GreaterThanOrEqual(_, v) if lit.isDefinedAt(v) => Some(FilterApi.gtEq(c, lit(v)))
+      case LessThan(_, v) if lit.isDefinedAt(v) => Some(FilterApi.lt(c, lit(v)))
+      case LessThanOrEqual(_, v) if lit.isDefinedAt(v) => Some(FilterApi.ltEq(c, lit(v)))
+      case In(_, vs) if vs.nonEmpty && vs.forall(lit.isDefinedAt) =>
+        Some(FilterApi.in(c, new java.util.HashSet[T](vs.toSeq.map(lit).asJava)))
+      case _ => None
+    }
+    val ps = filters.map(one)
+    if (ps.isEmpty || ps.contains(None)) None else Some(ps.flatten.reduce(FilterApi.and))
+  }
+
+  /** Answer `filters` (a conjunction over the indexed column `col`) on the
+    * driver: read the effective index's parquet files — base plus every
+    * delta generation — with parquet-mr through the Hadoop FileSystem (so
+    * any filesystem works and Hadoop's checksums are verified), the
+    * predicate pushed so row groups are skipped by their statistics and
+    * pages by the column index. Returns the matching row ids sorted by
+    * (value, row_id).
+    *
+    * None — the caller then runs the Spark job — when the predicate has no
+    * exact translation, or as soon as more than `bound` rows match. Only
+    * I16/I32/I64/STR columns with literals of exactly the column's type
+    * are probed: Spark's float comparisons (NaN largest, -0.0 == 0.0)
+    * differ from parquet-mr's, and a literal of another type would need
+    * Spark's casts. BIN/BOOL columns and `!=` (which matches nearly
+    * everything) keep the Spark job.
+    */
+  private[graft] def probe(store: ColumnStore, col: String, filters: Seq[Filter],
+      bound: Int = ProbeBound): Option[Array[Long]] = {
+    val pred = store.spec.col(col).ptype match {
+      case PType.I16 => predicate(FilterApi.intColumn(ValueCol),
+        { case v: Short => Int.box(v.toInt) }: PartialFunction[Any, Integer], filters)
+      case PType.I32 => predicate(FilterApi.intColumn(ValueCol),
+        { case v: Int => Int.box(v) }: PartialFunction[Any, Integer], filters)
+      case PType.I64 => predicate(FilterApi.longColumn(ValueCol),
+        { case v: Long => Long.box(v) }: PartialFunction[Any, java.lang.Long], filters)
+      case PType.STR => predicate(FilterApi.binaryColumn(ValueCol),
+        { case v: String => Binary.fromString(v) }: PartialFunction[Any, Binary], filters)
+      case _ => None
+    }
+    if (pred.isEmpty) return None
+    val filter = FilterCompat.get(pred.get)
+    val hits = scala.collection.mutable.ArrayBuffer.empty[Hit]
+    val paths = files(store, col, readMeta(store, col).runs).iterator
+    while (paths.hasNext) {
+      val in = HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(paths.next()), FsIO.conf)
+      val reader = new ParquetReader.Builder[Hit](in) {
+        override protected def getReadSupport: ReadSupport[Hit] = HitReadSupport
+      }.withFilter(filter).build()
+      try {
+        var h = reader.read()
+        while (h != null) {
+          hits += h
+          if (hits.length > bound) {
+            logWarning(s"index probe on $col matched more than $bound rows; " +
+              "answering with a Spark job instead")
+            return None
+          }
+          h = reader.read()
+        }
+      } finally reader.close()
+    }
+    Some(hits.sorted(hitOrder).map(_.rowId).toArray)
   }
 
   // ------------------------------------------------------- query surface
-  // All return a DataFrame[row_id: bigint] in value-then-row_id order
-  // (the reference returns Indices slices of the value-sorted permutation).
+  // All return a DataFrame[row_id: bigint] in value-then-row_id order (the
+  // reference returns Indices slices of the value-sorted permutation).
+  // Under the probe bound the lookup runs EAGERLY, on the driver, when the
+  // function is called, and the frame is a local relation: collecting it
+  // starts no job. Above the bound, or for a predicate the probe cannot
+  // translate exactly (`!=`, float columns, mistyped literals), the frame
+  // is the LAZY Spark job over `table`, as the one fallback path.
+
+  private def requireIndex(store: ColumnStore, col: String): Unit =
+    require(exists(store, col),
+      s"column $col has no index (reference raises, column.py:476-481)")
 
   private def ids(df: DataFrame, cond: Column): DataFrame =
     df.where(cond).select(RowIdCol)
 
+  /** The conjunction `filters` over column `c`: the probe's ids as a local
+    * frame, or the Spark job when the probe declines. The fallback's
+    * condition comes from the same filters through `GraftScan.indexCondition`,
+    * the translation DSv2 routing uses.
+    */
+  private def lookup(spark: SparkSession, s: ColumnStore, c: String,
+      filters: Filter*): DataFrame = {
+    requireIndex(s, c)
+    probe(s, c, filters) match {
+      case Some(hits) =>
+        spark.createDataFrame(hits.toSeq.map(Row(_)).asJava,
+          StructType(Seq(StructField(RowIdCol, LongType, nullable = false))))
+      case None =>
+        ids(table(spark, s, c), GraftScan.indexCondition(filters))
+    }
+  }
+
   def gt(spark: SparkSession, s: ColumnStore, c: String, v: Any): DataFrame =
-    ids(load(spark, s, c), col(ValueCol) > lit(v))
+    lookup(spark, s, c, GreaterThan(c, v))
   def ge(spark: SparkSession, s: ColumnStore, c: String, v: Any): DataFrame =
-    ids(load(spark, s, c), col(ValueCol) >= lit(v))
+    lookup(spark, s, c, GreaterThanOrEqual(c, v))
   def lt(spark: SparkSession, s: ColumnStore, c: String, v: Any): DataFrame =
-    ids(load(spark, s, c), col(ValueCol) < lit(v))
+    lookup(spark, s, c, LessThan(c, v))
   def le(spark: SparkSession, s: ColumnStore, c: String, v: Any): DataFrame =
-    ids(load(spark, s, c), col(ValueCol) <= lit(v))
+    lookup(spark, s, c, LessThanOrEqual(c, v))
   def eq(spark: SparkSession, s: ColumnStore, c: String, v: Any): DataFrame =
-    ids(load(spark, s, c), col(ValueCol) === lit(v))
-  def ne(spark: SparkSession, s: ColumnStore, c: String, v: Any): DataFrame =
-    ids(load(spark, s, c), col(ValueCol) =!= lit(v))
+    lookup(spark, s, c, EqualTo(c, v))
+  def ne(spark: SparkSession, s: ColumnStore, c: String, v: Any): DataFrame = {
+    requireIndex(s, c)
+    ids(table(spark, s, c), col(ValueCol) =!= lit(v))
+  }
 
   /** All four interval types (pycolumns between, column.py:841-914):
     * "[]" closed, "[)" half-open right, "(]" half-open left, "()" open.
     */
   def between(spark: SparkSession, s: ColumnStore, c: String, lo: Any, hi: Any,
       interval: String = "[]"): DataFrame = {
-    val v = col(ValueCol)
-    val cond = interval match {
-      case "[]" => v >= lit(lo) && v <= lit(hi)
-      case "[)" => v >= lit(lo) && v < lit(hi)
-      case "(]" => v > lit(lo) && v <= lit(hi)
-      case "()" => v > lit(lo) && v < lit(hi)
+    val (l, h) = interval match {
+      case "[]" => (GreaterThanOrEqual(c, lo), LessThanOrEqual(c, hi))
+      case "[)" => (GreaterThanOrEqual(c, lo), LessThan(c, hi))
+      case "(]" => (GreaterThan(c, lo), LessThanOrEqual(c, hi))
+      case "()" => (GreaterThan(c, lo), LessThan(c, hi))
       case other => throw new IllegalArgumentException(s"bad interval '$other'")
     }
-    ids(load(spark, s, c), cond)
+    lookup(spark, s, c, l, h)
   }
 
-  /** IN-list (pycolumns match, column.py:688-729). Small lists compile to
-    * `isin` (pushed to parquet); large probe sets should use
+  /** IN-list (pycolumns match, column.py:688-729). Small lists are probed
+    * (or compile to a pushed `isin`); large probe sets should use
     * `matchDf` (broadcast semi join) instead.
     */
   def matchIn(spark: SparkSession, s: ColumnStore, c: String, values: Seq[Any]): DataFrame =
-    ids(load(spark, s, c), col(ValueCol).isin(values: _*))
+    lookup(spark, s, c, In(c, values.toArray))
 
   /** IN via join for large probe sets: broadcast left-semi join against the
     * index (SURVEY.md Q4 mapping).
     */
   def matchDf(spark: SparkSession, s: ColumnStore, c: String, probe: DataFrame): DataFrame = {
     val p = probe.toDF(ValueCol).distinct()
-    load(spark, s, c)
+    requireIndex(s, c)
+    table(spark, s, c)
       .join(broadcast(p), Seq(ValueCol), "left_semi")
       .select(RowIdCol)
   }

@@ -682,8 +682,12 @@ object GraftScan {
     else if (rs.size == 1) SelRange(rs.head._1, rs.head._2, 1L)
     else SelRanges(rs.map(_._1).toArray, rs.map(_._2).toArray)
 
-  /** Index-routable predicate shapes → a condition over the index table. */
-  private[sources] def indexCond(f: Filter): Option[(String, org.apache.spark.sql.Column)] = {
+  /** Index-routable predicate shapes → (column, condition over the index
+    * table). The one translation of a `Filter` into the Spark-job form of an
+    * index lookup: DSv2 routing and the `Index` query functions both fall
+    * back to it when the driver probe declines.
+    */
+  private[graft] def indexCond(f: Filter): Option[(String, org.apache.spark.sql.Column)] = {
     import org.apache.spark.sql.functions.{col => fcol, lit}
     val v = fcol(graft.index.Index.ValueCol)
     f match {
@@ -692,10 +696,14 @@ object GraftScan {
       case sources.LessThan(c, x) => Some((c, v < lit(x)))
       case sources.LessThanOrEqual(c, x) => Some((c, v <= lit(x)))
       case sources.EqualTo(c, x) => Some((c, v === lit(x)))
-      case sources.In(c, xs) if xs.nonEmpty => Some((c, v.isin(xs.toIndexedSeq: _*)))
+      case sources.In(c, xs) => Some((c, v.isin(xs.toIndexedSeq: _*)))
       case _ => None
     }
   }
+
+  /** The index-table condition of a conjunction of routable filters. */
+  private[graft] def indexCondition(filters: Seq[Filter]): org.apache.spark.sql.Column =
+    filters.map(f => indexCond(f).get._2).reduce(_ && _)
 
   /** Exact table-wide min/max of a column from the per-partition stat
     * roll-ups, typed to the column — None when not provable (kind-0 or
@@ -989,10 +997,16 @@ object GraftScan {
     }
   }
 
+  /** Most ranges plus ids the plan cache holds over all its entries (16
+    * bytes each — ranges are two longs, ids an id and a position — so at
+    * most 16 MiB of driver heap).
+    */
+  private final val PlanCacheWeight = 1L << 20
+
   /** Bounded LRU cache of index-consult results (row-range sets / top-k id
     * selections). One logical query triggers SEVERAL plan materializations
     * (explain, AQE initial + final, a derived Dataset re-running pushdown),
-    * and each used to re-run the index lookup job. Entries are keyed by the
+    * and each used to re-run the index lookup. Entries are keyed by the
     * FULL freshness tuple (store nrows + update stamp + the canonicalized
     * predicate set), so a cached entry is used only when the compute would
     * provably return the same ranges: any append or in-place update moves
@@ -1000,21 +1014,14 @@ object GraftScan {
     * rebuild contains identical (value, row_id) pairs by construction.
     * Planning metadata only — never query results.
     */
-  private val planCache =
-    new java.util.LinkedHashMap[String, AnyRef](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, AnyRef]): Boolean = size() > 256
-    }
+  private val planCache = new PlanCache(maxEntries = 256, maxWeight = PlanCacheWeight)
 
-  private[sources] def cachedPlan[T <: AnyRef](key: String)(compute: => T): T = {
-    planCache.synchronized {
-      val v = planCache.get(key)
-      if (v != null) return v.asInstanceOf[T]
+  private[sources] def cachedPlan(key: String)(compute: => Option[Selection]): Option[Selection] =
+    planCache.get(key).getOrElse {
+      val v = compute
+      planCache.put(key, v)
+      v
     }
-    val v = compute
-    planCache.synchronized { planCache.put(key, v) }
-    v
-  }
 
   /** Merge sorted granule-bucket ids into [start, stop) row ranges. */
   private[sources] def bucketsToRanges(sorted: Array[Long], g: Long): Seq[(Long, Long)] = {
@@ -1031,13 +1038,52 @@ object GraftScan {
   }
 }
 
+/** LRU map of planned selections bounded by entry count AND by weight —
+  * the ranges or ids the entries hold. Counting entries alone let 256
+  * entries of 64k boxed ranges each pin hundreds of MB of driver heap. An
+  * entry heavier than the whole budget is never cached.
+  */
+private[sources] final class PlanCache(maxEntries: Int, maxWeight: Long) {
+  private val map =
+    new java.util.LinkedHashMap[String, Option[Selection]](64, 0.75f, true)
+  private var total = 0L
+
+  private def weight(v: Option[Selection]): Long = v match {
+    case Some(SelRanges(starts, _)) => math.max(1L, starts.length.toLong)
+    case Some(SelIds(ids, _)) => math.max(1L, ids.length.toLong)
+    case _ => 1L
+  }
+
+  def get(key: String): Option[Option[Selection]] = synchronized(Option(map.get(key)))
+
+  def put(key: String, v: Option[Selection]): Unit = synchronized {
+    val w = weight(v)
+    if (w <= maxWeight) {
+      val old = map.put(key, v)
+      if (old != null) total -= weight(old)
+      total += w
+      // evict least-recently-used first; the new entry is the youngest and
+      // fits the budget alone, so eviction stops before reaching it
+      val it = map.values().iterator()
+      while (map.size > maxEntries || total > maxWeight) {
+        total -= weight(it.next())
+        it.remove()
+      }
+    }
+  }
+
+  def size: Int = synchronized(map.size)
+  def totalWeight: Long = synchronized(total)
+}
+
 class GraftScan(root: String, required: StructType, pushed: Array[Filter],
     useIndex: Boolean = true, limit: Int = -1, maxRowsPerTrigger: Long = -1L,
     topN: Option[(String, Boolean, Int)] = None, offset: Int = 0,
     orderedCol: Option[String] = None)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering
-    with org.apache.spark.sql.connector.read.SupportsReportOrdering {
+    with org.apache.spark.sql.connector.read.SupportsReportOrdering
+    with org.apache.spark.internal.Logging {
 
   @transient private lazy val store = ColumnStore.open(root)
 
@@ -1081,17 +1127,18 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
     case other => Seq(other)
   }
 
-  /** Indexed-and-FRESH columns with routable predicates. */
-  private def routedMap(filters: Array[Filter]): Map[String, Seq[org.apache.spark.sql.Column]] =
+  /** Indexed-and-FRESH columns with their routable predicates. */
+  private def routedMap(filters: Array[Filter]): Map[String, Seq[Filter]] =
     if (!useIndex) Map.empty
-    else filters.flatMap(flat).flatMap(GraftScan.indexCond)
+    else filters.flatMap(flat)
+      .flatMap(f => GraftScan.indexCond(f).map { case (c, _) => (c, f) })
       .filter { case (c, _) => graft.index.Index.routableFor(store, c) }
       .groupBy(_._1).map { case (c, xs) => c -> xs.map(_._2).toSeq }
 
   /** Static (plan-time) route — decided without a job so the plan string
     * advertises it; runtime filters extend it at execution time.
     */
-  @transient private lazy val routed: Map[String, Seq[org.apache.spark.sql.Column]] =
+  @transient private lazy val routed: Map[String, Seq[Filter]] =
     routedMap(pushed)
 
   override def readSchema(): StructType = required
@@ -1139,16 +1186,19 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
   }
 
   /** SQL users get the secondary index WITHOUT the API facade: the scan
-    * looks the pushed predicates up in the value-sorted index table,
-    * compacts the matching row ids to granule-aligned ranges on executors
-    * (the driver only collects bucket ids, capped), and intersects them
-    * with the zone-map selection. Residual filters keep the result exact;
-    * `routableFor` guarantees the index saw every append/update, so the
-    * pruning is complete. Falls back to pure zone maps when the hit set is
-    * too broad to bound (index gives no benefit there anyway).
+    * looks the pushed predicates up in the value-sorted index, compacts the
+    * matching row ids to granule-aligned ranges, and intersects them with
+    * the zone-map selection. The lookup is the driver probe
+    * (`Index.probe`, no Spark job); when it declines (too many hits, or a
+    * predicate it cannot translate exactly) a Spark job buckets the ids on
+    * executors and the driver collects only bucket ids, capped. Residual
+    * filters keep the result exact; `routableFor` guarantees the index saw
+    * every append/update, so the pruning is complete. Falls back to pure
+    * zone maps when the hit set is too broad to bound (index gives no
+    * benefit there anyway).
     */
   private def indexRanges(spark: org.apache.spark.sql.SparkSession,
-      routed: Map[String, Seq[org.apache.spark.sql.Column]]): Option[Seq[(Long, Long)]] = {
+      routed: Map[String, Seq[Filter]]): Option[Selection] = {
     import org.apache.spark.sql.functions.{col => fcol}
     if (routed.isEmpty) return None
     // adaptive granule: fine enough to prune small tables, coarse enough
@@ -1161,27 +1211,30 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
     // collide with a prior cache entry
     val key = s"ir|$root|${store.nrows}|${store.updateStamp}|$g|" +
       routed.toSeq.sortBy(_._1)
-        .map { case (c, conds) =>
+        .map { case (c, filters) =>
           c + "@" + graft.index.Index.metaIdent(store, c) + ":" +
-            conds.mkString("&&") }.mkString("|")
+            filters.mkString("&&") }.mkString("|")
     // a failed consult falls back OUTSIDE the cache: caching that None
     // would keep routing off for this key after the index is readable again
     try GraftScan.cachedPlan(key) {
       var acc: Option[Seq[(Long, Long)]] = None
-      routed.foreach { case (c, conds) =>
-        val idx = graft.index.Index.table(spark, store, c)
-        val buckets = idx.where(conds.reduce(_ && _))
-          .select((fcol(graft.index.Index.RowIdCol) / g).cast("long").as("b"))
-          .distinct().limit(maxRanges + 1).collect().map(_.getLong(0))
+      routed.foreach { case (c, filters) =>
+        val buckets = graft.index.Index.probe(store, c, filters) match {
+          case Some(ids) => ids.map(_ / g).distinct
+          case None =>
+            graft.index.Index.table(spark, store, c).where(GraftScan.indexCondition(filters))
+              .select((fcol(graft.index.Index.RowIdCol) / g).cast("long").as("b"))
+              .distinct().limit(maxRanges + 1).collect().map(_.getLong(0))
+        }
         if (buckets.length <= maxRanges) {
           val ranges = GraftScan.bucketsToRanges(buckets.sorted, g)
           acc = Some(acc.fold(ranges)(prev => GraftScan.intersectRanges(prev, ranges)))
         }
       }
-      acc
+      acc.map(GraftScan.fromRanges)
     } catch {
       case e: Exception =>
-        System.err.println(s"[graft] index routing failed, falling back to zone maps: ${e.getMessage}")
+        logWarning(s"index routing failed, falling back to zone maps: ${e.getMessage}")
         None
     }
   }
@@ -1216,7 +1269,7 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
         }
       } catch {
         case e: Exception =>
-          System.err.println(s"[graft] topN routing failed, falling back: ${e.getMessage}")
+          logWarning(s"topN routing failed, falling back: ${e.getMessage}")
           None
       }
     }
@@ -1244,8 +1297,7 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
         if (m.gens.nonEmpty) None // per-gen order only; fallback sorts
         else {
           val baseDir = s"${graft.index.Index.dir(store, c)}/${m.base}"
-          val files = FsIO.list(baseDir)
-            .filter(f => f.startsWith("part-") && f.endsWith(".parquet")).sorted
+          val files = graft.index.Index.partFiles(baseDir)
           if (files.isEmpty) None
           else Some(GraftOrderedPartition(root, c,
             required.fieldNames.filterNot(_ == "_row_id").toSeq,
@@ -1289,7 +1341,8 @@ class GraftScan(root: String, required: StructType, pushed: Array[Filter],
       else routedMap(pushed ++ runtimeFilters)
     val sel0 = indexRanges(session, rmap) match {
       case Some(ir) =>
-        GraftScan.fromRanges(GraftScan.intersectRanges(GraftScan.toRanges(zone), ir))
+        GraftScan.fromRanges(GraftScan.intersectRanges(
+          GraftScan.toRanges(zone), GraftScan.toRanges(ir)))
       case None => zone
     }
     // composition per Spark's pushDownLimitAndOffset: a pushed limit is the

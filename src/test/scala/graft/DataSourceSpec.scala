@@ -575,6 +575,76 @@ class DataSourceSpec extends AnyFunSuite {
     c.dropStore()
   }
 
+  /** Runs `f` and counts the Spark jobs it starts, with a SparkListener.
+    * Listener events arrive asynchronously but in order, so a marker job
+    * before and after `f` brackets exactly the jobs `f` started.
+    */
+  private def jobsStarted[T](f: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val begun = new java.util.concurrent.CountDownLatch(1)
+    val ended = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.job.description")) match {
+          case Some("jobs-marker-begin") => begun.countDown()
+          case Some("jobs-marker-end") => ended.countDown()
+          case _ => if (begun.getCount == 0 && ended.getCount == 1) jobs.incrementAndGet()
+        }
+    }
+    def marker(name: String, latch: java.util.concurrent.CountDownLatch): Unit = {
+      sc.setJobDescription(name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(latch.await(60, java.util.concurrent.TimeUnit.SECONDS), s"$name never seen")
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("jobs-marker-begin", begun)
+      val out = f
+      marker("jobs-marker-end", ended)
+      (out, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("index lookups under the probe bound run no Spark job to plan; over it, exact") {
+    // rows [0, bound] share k = -1 (bound + 1 hits); the rest have k = row
+    val bound = graft.index.Index.ProbeBound
+    val n = bound + 2000
+    val schema = StructType(Seq(
+      StructField("k", LongType, nullable = false),
+      StructField("x", IntegerType, nullable = false)))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(
+      (0 until n).map(i => Row(if (i <= bound) -1L else i.toLong, i)), 4), schema)
+    val c = Columns.fromDataFrame(spark, tmpDir("graft-jobs"), df, chunkRows = 1000)
+    c("k").createIndex()
+    val v = (bound + 700).toLong
+    def scanOf(k: Long): graft.sources.GraftScan = {
+      val builder = new graft.sources.GraftScanBuilder(c.root)
+      builder.pushFilters(Array(org.apache.spark.sql.sources.EqualTo("k", k)))
+      builder.build().asInstanceOf[graft.sources.GraftScan]
+    }
+    def chunksOf(parts: Array[org.apache.spark.sql.connector.read.InputPartition]): Int =
+      parts.map(_.asInstanceOf[graft.sources.GraftInputPartition]
+        .unit.colChunks.valuesIterator.map(_.size).sum).sum
+    // a routed DSv2 point lookup plans on the driver alone
+    val (routed, planJobs) = jobsStarted(scanOf(v).planInputPartitions())
+    assert(planJobs == 0, s"planning a routed point lookup started $planJobs jobs")
+    assert(chunksOf(routed) <= 4, s"route did not prune: ${chunksOf(routed)} chunks planned")
+    // API === plus gather: the lookup is local, the gather's read is the job
+    val (got, gatherJobs) = jobsStarted(c.gather(c("k") === v, Seq("x")).collect())
+    assert(gatherJobs == 1, s"=== + gather + collect started $gatherJobs jobs")
+    assert(got.map(r => (r.getLong(0), r.getInt(1))).toSeq == Seq((v, v.toInt)))
+    // over the bound: the probe declines, the Spark job routes, still exact
+    val (_, overJobs) = jobsStarted(scanOf(-1L).planInputPartitions())
+    assert(overJobs >= 1, "an over-bound lookup should fall back to the bucket job")
+    val q = spark.read.format("graft").load(c.root).where(col("k") === -1L)
+    assert(q.queryExecution.executedPlan.toString.contains("IndexRouted: [k]"))
+    assert(q.count() == bound + 1L)
+    assert(c.gather(c("k") === -1L, Seq("x")).count() == bound + 1L)
+    c.dropStore()
+  }
+
   test("runtime IN filter prunes chunks at execution (DPP analogue)") {
     val schema = StructType(Seq(StructField("id", LongType, nullable = false)))
     val df0 = spark.createDataFrame(

@@ -444,6 +444,109 @@ class IndexSpec extends AnyFunSuite {
     c.dropStore()
   }
 
+  test("driver probe equals the Spark job: every shape, type and hit count") {
+    import org.apache.spark.sql.{Column, DataFrame}
+    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.sources._
+    sys.props("graft.index.gc.graceMs") = "0"
+    // strings: non-ASCII (bytes >= 0x80 sort AFTER ASCII in Spark's unsigned
+    // order), shared prefixes and the empty string
+    val words = Seq("", "a", "abc", "abcd", "abce", "z", "é", "émile", "日本", "日本語")
+    // value class of row i: a few unique keys (1 hit), the rest repeat
+    def key(i: Int): Int = if (i % 97 == 5) 1000 + i else i % words.size
+    def row(i: Int): Row = {
+      val k = key(i)
+      val w = if (k >= 1000) s"u$k" else words(k)
+      Row(k.toShort, k, k.toLong, w, k.toFloat)
+    }
+    val schema = StructType(Seq(
+      StructField("i16", ShortType, nullable = false),
+      StructField("i32", IntegerType, nullable = false),
+      StructField("i64", LongType, nullable = false),
+      StructField("s", StringType, nullable = false),
+      StructField("f", FloatType, nullable = false)))
+    def df(from: Int, until: Int) = spark.createDataFrame(
+      spark.sparkContext.parallelize((from until until).map(row), 2), schema)
+    val c = Columns.fromDataFrame(spark, tmpDir("graft-probe"), df(0, 600))
+    Seq("i16", "i32", "i64", "s", "f").foreach(c(_).createIndex())
+    // two appends: each refresh stacks a delta generation on the base
+    c.append(df(600, 640))
+    c.append(df(640, 700))
+    assert(Index.deltaGens(c.store, "i64").size == 2)
+
+    final case class Shape(name: String, filters: Seq[Filter], cond: Column,
+        api: Option[GraftColumn => DataFrame])
+    def shapes(n: String, v: Any, lo: Any, hi: Any, in: Seq[Any]): Seq[Shape] = {
+      val x = col("value")
+      val intervals = Seq(
+        ("[]", GreaterThanOrEqual(n, lo), LessThanOrEqual(n, hi), x >= lit(lo) && x <= lit(hi)),
+        ("[)", GreaterThanOrEqual(n, lo), LessThan(n, hi), x >= lit(lo) && x < lit(hi)),
+        ("(]", GreaterThan(n, lo), LessThanOrEqual(n, hi), x > lit(lo) && x <= lit(hi)),
+        ("()", GreaterThan(n, lo), LessThan(n, hi), x > lit(lo) && x < lit(hi)))
+      Seq(
+        Shape("eq", Seq(EqualTo(n, v)), x === lit(v), Some(_ === v)),
+        Shape("gt", Seq(GreaterThan(n, v)), x > lit(v), Some(_ > v)),
+        Shape("ge", Seq(GreaterThanOrEqual(n, v)), x >= lit(v), Some(_ >= v)),
+        Shape("lt", Seq(LessThan(n, v)), x < lit(v), Some(_ < v)),
+        Shape("le", Seq(LessThanOrEqual(n, v)), x <= lit(v), Some(_ <= v)),
+        Shape("in", Seq(In(n, in.toArray)), x.isin(in: _*), Some(_.matchIn(in)))) ++
+        intervals.map { case (iv, l, h, cond) =>
+          Shape(s"between$iv", Seq(l, h), cond, Some(_.between(lo, hi, iv))) } ++
+        // DSv2 pushes a range as separate conjuncts, in either order
+        Seq(Shape("range", Seq(LessThan(n, hi), GreaterThan(n, lo)), x < lit(hi) && x > lit(lo), None))
+    }
+    def lits(n: String, k: Int): Any = n match {
+      case "i16" => k.toShort
+      case "i32" => k
+      case "i64" => k.toLong
+      case "s" => if (k >= 1000) s"u$k" else words(k)
+    }
+    val unique = key(5) // 1 hit
+    val dup = 3 // many hits
+    for (n <- Seq("i16", "i32", "i64", "s")) {
+      val missing: Any = if (n == "s") "abcc" else lits(n, 999) // 0 hits
+      val l = lits(n, _: Int)
+      for ((v, what) <- Seq((missing, "0 hits"), (l(unique), "1 hit"), (l(dup), "many hits"))) {
+        val lo = if (n == "s") l(2) else l(1) // "abc" / 1
+        val hi = if (n == "s") l(6) else l(7) // "é" / 7
+        for (sh <- shapes(n, v, lo, hi, Seq(v, l(1), missing))) {
+          val what2 = s"$n ${sh.name} ($what)"
+          val expect = Index.table(spark, c.store, n).where(sh.cond)
+            .orderBy("value", "row_id").select("row_id").collect().map(_.getLong(0)).toSeq
+          val got = Index.probe(c.store, n, sh.filters)
+          assert(got.isDefined, s"$what2: probe declined")
+          assert(got.get.toSeq == expect, s"$what2: probe ${got.get.toSeq} != job $expect")
+          sh.api.foreach { f =>
+            assert(f(c(n)).collect().map(_.getLong(0)).toSeq == expect, s"$what2: API")
+          }
+          // exactly at the bound the probe answers; one hit over, it declines
+          if (expect.nonEmpty) {
+            assert(Index.probe(c.store, n, sh.filters, bound = expect.size).isDefined, what2)
+            assert(Index.probe(c.store, n, sh.filters, bound = expect.size - 1).isEmpty, what2)
+          }
+        }
+      }
+      // the DSv2 route over base + generations agrees with an unrouted scan
+      val scan = spark.read.format("graft").load(c.root)
+      val plain = spark.read.format("graft").option("useIndex", "false").load(c.root)
+      for (p <- Seq(col(n) === l(dup), col(n).isin(l(unique), l(dup)),
+          col(n) > l(1) && col(n) <= l(7))) {
+        val q = scan.where(p).select("_row_id")
+        assert(q.queryExecution.executedPlan.toString.contains(s"IndexRouted: [$n]"), s"$n $p")
+        assert(q.collect().map(_.getLong(0)).sorted.toSeq ==
+          plain.where(p).select("_row_id").collect().map(_.getLong(0)).sorted.toSeq, s"$n $p")
+      }
+    }
+    // the Spark path stays exact: float columns, `!=`, mistyped literals
+    val all = (0 until 700).map(i => (i.toLong, key(i)))
+    assert(Index.probe(c.store, "f", Seq(GreaterThan("f", 3f))).isEmpty)
+    assert(RowIds.collectSorted(c("f") > 3f).toSeq == all.filter(_._2 > 3).map(_._1))
+    assert(RowIds.collectSorted(c("i64") =!= 3L).toSeq == all.filter(_._2 != 3).map(_._1))
+    assert(Index.probe(c.store, "i64", Seq(EqualTo("i64", 3))).isEmpty)
+    assert(RowIds.collectSorted(c("i64") === 3).toSeq == all.filter(_._2 == 3).map(_._1))
+    c.dropStore()
+  }
+
   test("sub-tables nest with independent nrows (test_access.py:228-274)") {
     val schema = StructType(Seq(StructField("x", DoubleType, nullable = false)))
     def df(n: Int) = spark.createDataFrame(
